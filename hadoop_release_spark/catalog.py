@@ -80,7 +80,7 @@ def normalize_events(df: DataFrame) -> DataFrame:
     )
 
 
-#: Memoized (applicationId, sf_dir, name, mtime_ns) → loaded
+#: Memoized (applicationId, session, sf_dir, name, mtime_ns) → loaded
 #: DataFrame. A DataFrame is an immutable logical plan — reusing it
 #: caches the parquet FOOTER/schema/listing work (~0.15 s of driver
 #: time per ``spark.read.parquet`` call, measured r15), exactly what
@@ -93,8 +93,12 @@ def normalize_events(df: DataFrame) -> DataFrame:
 #: a live session — previously the memoized DataFrame pinned the old
 #: file listing (deleted files failed tasks mid-query, rewritten
 #: files read stale). Bounded so long multi-session test runs cannot
-#: accumulate stale plans.
-_TABLE_MEMO: dict[tuple[str, str, str, int], DataFrame] = {}
+#: accumulate stale plans. Keyed per SESSION, not per application: a
+#: frame is bound to the session that read it, and a query run on
+#: ``spark.newSession()`` must build its plan, temp views and confs in
+#: that session. The id is stable while its entry lives, because the
+#: memoized frame holds its session.
+_TABLE_MEMO: dict[tuple[str, int, str, str, int], DataFrame] = {}
 
 
 def _table_mtime_ns(path: str) -> int:
@@ -103,7 +107,13 @@ def _table_mtime_ns(path: str) -> int:
     file is added/removed — full-tree walking is the streaming schema
     memo's job, too hot for every table() call). Remote paths
     (hdfs://, s3a://) stat-fail → constant -1 (cache per sf_dir, the
-    runner's rule: remote fixtures are not regenerated in place)."""
+    runner's rule: remote fixtures are not regenerated in place).
+
+    Known gap: rewriting a part file IN PLACE under the same name
+    inside a directory fixture leaves the directory mtime unchanged,
+    so the memo keeps serving the plan built before the rewrite.
+    Regenerate a directory fixture by replacing the directory (or
+    adding/removing part files), not by overwriting a part file."""
     import os
 
     try:
@@ -120,7 +130,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except Exception:
         app_id = None
     path = f"{sf_dir}/{name}.parquet"
-    key = (app_id, sf_dir, name, _table_mtime_ns(path))
+    key = (app_id, id(spark), sf_dir, name, _table_mtime_ns(path))
     if app_id is not None:
         cached = _TABLE_MEMO.get(key)
         if cached is not None:

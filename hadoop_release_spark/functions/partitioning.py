@@ -18,6 +18,8 @@ of shuffling the (small, fixture-sized) input once.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 
 
@@ -27,12 +29,13 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
 
     Row set unchanged (round-robin placement only); plan gains one
     rebalance exchange in the under-partitioned (local/fixture) case
-    and is untouched otherwise.
+    and is untouched otherwise. If the partition probe fails, the
+    failure is warned about and ``df`` is returned unchanged.
     """
     try:
         cores = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < cores:
             return df.repartition(cores)
-    except Exception:
-        pass
+    except Exception as exc:
+        warnings.warn(f"spread_small_scan: partition probe failed: {exc!r}")
     return df

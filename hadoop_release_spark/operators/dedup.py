@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_release_spark.functions.materialize import eager_truncate
+from hadoop_release_spark.functions.materialize import eager_truncate, persist
 from hadoop_release_spark.functions.partitioning import spread_small_scan
 
 #: Mersenne prime 2^31-1; per-shingle hashes are reduced mod P first
@@ -639,7 +639,7 @@ def lsh_candidate_pairs(
         F.col("__sk.shingles").alias("__shingles"),
         F.col("__sk.sig").alias("__sig"),
     )
-    base = base.persist()
+    base = persist(base)
 
     # Candidate generation on SLIM rows only — (id, band, bucket).
     # Never ship the shingle arrays through the band shuffle: payload
@@ -989,14 +989,11 @@ def lsh_pair_calibration(
 
     CACHE-RELEASE CONTRACT (round-8 advisor): the persisted staging
     block intentionally OUTLIVES this call — the caller materializes
-    the returned frame after we return, and the registry wrapper
-    releases it at the start of the NEXT query (plans/registry.py
-    _wrap). Direct library callers outside the registry (tests,
-    notebooks) must release it themselves between calls —
-    ``spark.catalog.clearCache()`` plus unpersisting
-    ``sparkContext._jsc.getPersistentRDDs()`` — or a tight loop
-    (e.g. hypothesis running hundreds of examples) accumulates one
-    cached shingle pass per call until LRU eviction kicks in."""
+    the returned frame after we return. Registry queries release it
+    at the start of the next query; direct library callers (tests,
+    notebooks) call ``functions.materialize.release()`` between
+    calls, or a tight loop (e.g. hypothesis running hundreds of
+    examples) accumulates one cached shingle pass per call."""
     rows_per_band = num_hashes // bands
     # r16: fused kernel — shingles + finished signature in ONE Python
     # pass; spread_small_scan = the d37 kernel-input guard (see
@@ -1011,7 +1008,7 @@ def lsh_pair_calibration(
         F.col("__sk.shingles").alias("__shingles"),
         F.col("__sk.sig").alias("__sig"),
     )
-    base = base.persist()
+    base = persist(base)
     sigs = base
     banded = sigs.select(
         "__id",

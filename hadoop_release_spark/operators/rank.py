@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_release_spark.functions.materialize import persist
+
 _PID = "__rank_pid"
 
 
@@ -50,7 +52,7 @@ def global_prefix_sums(
     parted = df.repartitionByRange(n_part, *order_cols).withColumn(
         _PID, F.spark_partition_id()
     )
-    parted = parted.persist()
+    parted = persist(parted)
 
     totals = (
         parted.groupBy(_PID)
@@ -166,7 +168,7 @@ def global_row_number(df: DataFrame, cols: list, rn_name: str = "rn") -> DataFra
     # corrupt the offsets. The same holds at cluster scale — stage
     # materialization is inherent to total-order numbering (TeraSort
     # also does a dedicated sampling pass over stable input).
-    parted = parted.persist()
+    parted = persist(parted)
 
     counts = parted.groupBy(_PID).count().orderBy(_PID).collect()
     rows, acc = [], 0
@@ -213,7 +215,7 @@ def global_prefix_max(
     parted = df.repartitionByRange(n_part, *order_cols).withColumn(
         _PID, F.spark_partition_id()
     )
-    parted = parted.persist()
+    parted = persist(parted)
 
     totals = (
         parted.groupBy(_PID)
@@ -301,7 +303,7 @@ def global_kth(
     parted = df.repartitionByRange(n_part, *order_cols).withColumn(
         _PID, F.spark_partition_id()
     )
-    parted = parted.persist()
+    parted = persist(parted)
 
     counts = parted.groupBy(_PID).count().orderBy(_PID).collect()
     total = sum(r["count"] for r in counts)

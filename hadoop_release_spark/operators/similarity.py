@@ -30,6 +30,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_release_spark.functions.materialize import persist
 from hadoop_release_spark.functions.vectors import cosine, dot, norm2
 
 #: Hard ceiling on the number of centroids rank_clusters_arrow will
@@ -41,30 +42,6 @@ from hadoop_release_spark.functions.vectors import cosine, dot, norm2
 #: cluster-bucketed ingest, not a bigger collect — so raise loudly
 #: instead of degrading. Overridable per call for tests / odd shapes.
 ARROW_KERNEL_MAX_CENTROIDS = 131_072
-
-
-#: Operator-internal persisted frames awaiting release (r14 advisor):
-#: the two-level (IMI) variants persist their slim coarse-ranking
-#: frame but are deliberately NOT registry rows, so the registry
-#: wrapper's clearCache never fires for a direct library caller — the
-#: cached blocks accumulated for the session. The functions register
-#: their persists here; callers release them with
-#: :func:`release_internal_persists` once the returned frame is
-#: materialized (registry consumers need not bother — the wrapper's
-#: blanket clearCache at the next query still covers them).
-_INTERNAL_PERSISTS: list[DataFrame] = []
-
-
-def release_internal_persists() -> None:
-    """Unpersist every operator-internal cache registered by the
-    two-level quantizer functions. Call after materializing their
-    result; safe to call repeatedly (idempotent on an empty list)."""
-    while _INTERNAL_PERSISTS:
-        df = _INTERNAL_PERSISTS.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
 
 
 def systematic_stride(n: int) -> int:
@@ -1313,21 +1290,18 @@ def assign_clusters_two_level(
     # every vector crossing the Python→JVM Arrow boundary) was ~85%
     # of l56_imi's sf10 wall (56 of 66 s); the vector fan-out now
     # happens JVM-side in the columnar join below. Persisted so the
-    # N×K1 kernel runs once; registered for release — registry
-    # consumers get the wrapper's clearCache, direct library callers
-    # call release_internal_persists() (r14 advisor: the old comment
-    # deferred to a wrapper that never fires for non-registry
-    # variants).
-    slim = rank_clusters_arrow(
-        embeddings,
-        coarse,
-        npb,
-        dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        emit_vectors=False,
-    ).persist()
-    _INTERNAL_PERSISTS.append(slim)
+    # N×K1 kernel runs once.
+    slim = persist(
+        rank_clusters_arrow(
+            embeddings,
+            coarse,
+            npb,
+            dim,
+            id_col=id_col,
+            vec_col=vec_col,
+            emit_vectors=False,
+        )
+    )
     # One (vector, norm) spine, computed by the declarative fold —
     # bit-identical to the kernel's __nrm by the standing parity
     # argument (same left-to-right per-dimension IEEE accumulation;
@@ -1428,18 +1402,18 @@ def rank_clusters_two_level(
     # Slim coarse ranking + JVM-side vector fan-out — the same
     # Arrow-boundary economy as assign_clusters_two_level (see the
     # comment there; ~85% of the sf10 wall was the emit_vectors
-    # fan-out). Persist registered for release_internal_persists —
-    # see the _INTERNAL_PERSISTS note.
-    slim = rank_clusters_arrow(
-        embeddings,
-        coarse,
-        npb,
-        dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        emit_vectors=False,
-    ).persist()
-    _INTERNAL_PERSISTS.append(slim)
+    # fan-out).
+    slim = persist(
+        rank_clusters_arrow(
+            embeddings,
+            coarse,
+            npb,
+            dim,
+            id_col=id_col,
+            vec_col=vec_col,
+            emit_vectors=False,
+        )
+    )
     spine = embeddings.select(id_col, vec_col).withColumn(
         "__nrm", norm2(F.col(vec_col))
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_release_spark.catalog import table
+from hadoop_release_spark.functions.materialize import persist
 from hadoop_release_spark.functions.contracts import ts_us
 from hadoop_release_spark.plans.registry import register
 
@@ -293,7 +294,7 @@ def a11_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    parsed = parsed.cache()  # one parse serves both counts
+    parsed = persist(parsed)  # one parse serves both counts
     good = parsed.filter(F.col("_corrupt_record").isNull()).select(
         F.lit("good").alias("kind")
     )

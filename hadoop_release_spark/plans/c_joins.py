@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.contracts import dsum, net_price, osum
+from hadoop_release_spark.functions.materialize import temp_view
 from hadoop_release_spark.plans.registry import register
 
 
@@ -416,7 +417,7 @@ def c16_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture value sits that close to its nation's mean), unlike in a
     hashed OUTPUT where davg/oavg is mandatory.
     """
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer_c16")
+    temp_view(spark, "customer_c16", table(spark, sf_dir, "customer"))
     return spark.sql(
         """
         SELECT c_custkey, c_acctbal, c_nationkey
@@ -456,9 +457,8 @@ def c17_exists_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks the join order and pushes o_orderstatus/date predicates
     into the scans. 'Late' is shipped >90 days after the order date
     (the slimmed fixture has no receipt/commit dates)."""
-    table(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_c17")
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_c17")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders_c17")
+    for name in ("supplier", "lineitem", "orders"):
+        temp_view(spark, f"{name}_c17", table(spark, sf_dir, name))
     return spark.sql(
         """
         SELECT s.s_name, count(*) AS numwait
@@ -505,7 +505,7 @@ def c18_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously required a driver-side loop like operators/dedup.py's
     connected components. Each recursion step is one distributed
     join; the engine handles fixpoint detection."""
-    table(spark, sf_dir, "nation").createOrReplaceTempView("nation_c18")
+    temp_view(spark, "nation_c18", table(spark, sf_dir, "nation"))
     return spark.sql(
         """
         WITH RECURSIVE tree AS (
@@ -928,7 +928,7 @@ def c24_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-execution of the inner query. Customers without orders drop
     (inner lateral), so the result is |matching customers| × ≤2."""
     for name in ("customer", "orders"):
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+        temp_view(spark, name, table(spark, sf_dir, name))
     return spark.sql(_C24_SQL)
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.contracts import davg, dsum, net_price, oavg, osum, r4, r6
+from hadoop_release_spark.functions.materialize import persist, temp_view
 from hadoop_release_spark.plans.registry import register
 
 
@@ -258,7 +259,7 @@ def d10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d11_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via SQL (the general form of
     rollup/cube)."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    temp_view(spark, "orders_gs", table(spark, sf_dir, "orders"))
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
@@ -1473,9 +1474,8 @@ def d32_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per feeds four downstream consumers (two prefix-sum passes, the
     # totals row, and through them disc twice more); persist once so
-    # the pooled-distinct aggregation runs a single time. Released by
-    # the registry wrapper before the next query.
-    per = per.persist()
+    # the pooled-distinct aggregation runs a single time.
+    per = persist(per)
     # ONE range-partitioned pass carries BOTH cumulative counts
     # (global_prefix_sums amortizes the sampling/sort across series).
     cum = global_prefix_sums(per, ["cents"], ["a", "b"], ["c1x", "c2x"])
@@ -1511,7 +1511,7 @@ def d32_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # disc feeds the max row, the argmin row, and nothing else —
     # persist so the prefix-sum lineage is not replayed per reduction.
-    disc = disc.persist()
+    disc = persist(disc)
     mx = disc.agg(F.max("dnum").cast("long").alias("d_num"))
     at = (
         disc.join(F.broadcast(mx), disc.dnum == mx.d_num)
@@ -1702,9 +1702,8 @@ def d34_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("w")
     )
     # pp feeds the median pass AND the deviation re-key; persist so
-    # the (status, cents) compression shuffle runs once (released by
-    # the registry wrapper before the next query).
-    pp = pp.persist()
+    # the (status, cents) compression shuffle runs once.
+    pp = persist(pp)
 
     def lower_median(df, val_col, out_name):
         w_cum = Window.partitionBy("o_orderstatus").orderBy(val_col)
@@ -2924,18 +2923,6 @@ def d42_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: d43: how the |days|² pairwise-slope table is materialized before
-#: the two-phase selection ("persist" | "localCheckpoint" | "none").
-#: Selectable for A/B adjudication (the DF_GUARD_FORM precedent);
-#: rows identical in every mode — only the number of times the pair
-#: join executes changes (see the in-function comment). r16 default =
-#: "none": the n=6×2-session interleaved 32-core A/B
-#: (scripts/ab_d43.py, OPTIMIZATION_r16.md) read none med 2.04-2.10 /
-#: min 1.92-1.94 s vs persist med 2.2-2.33 and localCheckpoint med
-#: 2.48-2.56 — the warm pair join re-execution is cheaper than the
-#: persist round-trip at every core count measured.
-_D43_SLOPES_MAT = "none"
-
 #: d43: one day in epoch-microseconds (daily revenue grid).
 _D43_DAY_US = 86_400 * 1_000_000
 
@@ -3029,9 +3016,8 @@ def d43_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").cast("long").alias("cents"))
     )
     # daily feeds the pair join (twice), the residual pass, and the
-    # day count; persist so the orders scan+agg runs once (released
-    # by the registry wrapper before the next query).
-    daily = daily.persist()
+    # day count; persist so the orders scan+agg runs once.
+    daily = persist(daily)
     nd = daily.agg(F.count("*").cast("long").alias("n_days"))
     a = daily.select(F.col("day_id").alias("da"), F.col("cents").alias("ca"))
     b = daily.select(F.col("day_id").alias("db"), F.col("cents").alias("cb"))
@@ -3044,20 +3030,11 @@ def d43_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("slope")
         )
     )
-    # r15: materialize the pair table before the selection —
-    # global_kth's range partitioner executes its child twice
-    # (sampling pass, then the shuffle map), so the unmaterialized
-    # form ran the |days|² pair join twice (~0.43 s per execution at
-    # sf0.1, measured via noop; d44 already does this). Released by
-    # the registry wrapper. r16: the driver's 32-core r15 run read
-    # the persist 0.72x; the form is selectable (_D43_SLOPES_MAT) and
-    # the shipped default is the winner of the n≥6 interleaved
-    # 32-core A/B recorded in OPTIMIZATION_r16.md.
-    if _D43_SLOPES_MAT == "persist":
-        slopes = slopes.persist()
-    elif _D43_SLOPES_MAT == "localCheckpoint":
-        slopes = slopes.localCheckpoint()
-    # "none": leave the plan unmaterialized (the pre-r15 form).
+    # The pair table stays unmaterialized: global_kth's range
+    # partitioner executes it twice (sampling pass, then the shuffle
+    # map), and the n≥6 interleaved 32-core A/B in OPTIMIZATION_r16.md
+    # measured that re-execution cheaper than a persist or a
+    # localCheckpoint.
     # .agg(min) over the selected single row is identity in the
     # normal case and turns the degenerate one-day corpus (no pairs,
     # empty selection) into a 1-row NULL — matching the oracle's
@@ -3173,8 +3150,8 @@ def d44_theil_sen_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").cast("long").alias("cents"))
     )
     # hourly feeds the pair join twice + the hour count; persist so
-    # the events scan+agg runs once (released by the registry wrapper).
-    hourly = hourly.persist()
+    # the events scan+agg runs once.
+    hourly = persist(hourly)
     nh = hourly.agg(F.count("*").cast("long").alias("n_hours"))
     # Left side replicated into its own bin and the NEXT bin — every
     # in-window pair (0 < Δh ≤ W) has its b-row in one of the two.
@@ -3214,7 +3191,7 @@ def d44_theil_sen_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # answer (review finding: a coalesce here masked the fail-loud
     # signal). The genuinely pair-free grid reports 0 + NULL, which
     # the oracle matches.
-    slopes = slopes.persist()
+    slopes = persist(slopes)
     np_ = slopes.agg(F.count("*").cast("long").alias("n_pairs"))
     smed = global_kth(slopes, ["slope"], lambda t: (t + 1) // 2).agg(
         F.min("slope").alias("slope_med")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
+from hadoop_release_spark.functions.materialize import persist
 from hadoop_release_spark.plans.registry import register
 
 _DEC = "decimal(25,8)"
@@ -2073,8 +2074,8 @@ def e34_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("t_us") + 1).alias("e_excl_us"),
     )
     # iv feeds the sweep AND the carry explode; persist so the
-    # session shuffle runs once (released by the registry wrapper).
-    iv = iv.persist()
+    # session shuffle runs once.
+    iv = persist(iv)
     deltas = iv.select(
         F.explode(
             F.array(

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.contracts import dsum, net_price, osum
-from hadoop_release_spark.functions.materialize import eager_truncate
+from hadoop_release_spark.functions.materialize import eager_truncate, persist
 from hadoop_release_spark.plans.registry import register
 
 
@@ -326,9 +326,7 @@ def i10_mr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # eager_truncate on the loop state: materializes like
     # persist+count AND truncates lineage so each iteration's plan is
-    # constant-size (see docstring; the checkpoint blocks are released
-    # by the registry wrapper's unpersist sweep at the next query,
-    # same lifetime contract as the old persists). r16: the helper
+    # constant-size (see docstring). r16: the helper
     # picks localCheckpoint in local mode but RELIABLE checkpoint()
     # when a checkpoint dir is configured — localCheckpoint blocks
     # die with a lost executor and the truncated lineage cannot
@@ -416,7 +414,12 @@ def i11_mr_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
 
-    und = (
+    # persist: the wedge/closure joins reference the edge list
+    # THREE times — without caching, each alias re-executes the
+    # whole 4-way star join (measured: 9 lineitem scans). The
+    # edge list is node-bounded (≤ nodes², tiny), the same
+    # bounded-state argument as i10's rank table.
+    und = persist(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -426,13 +429,6 @@ def i11_mr_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("s_nationkey", "c_nationkey").alias("v"),
         )
         .distinct()
-        # persist: the wedge/closure joins reference the edge list
-        # THREE times — without caching, each alias re-executes the
-        # whole 4-way star join (measured: 9 lineitem scans). The
-        # edge list is node-bounded (≤ nodes², tiny), the same
-        # bounded-state argument as i10's rank table; released by
-        # the registry wrapper before the next query.
-        .persist()
     )
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     tri = (
@@ -517,14 +513,13 @@ def i12_mr_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
 
-    edges = (
+    edges = persist(  # referenced once per level; node²-bounded
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
         .distinct()
-        .persist()  # referenced once per level; node²-bounded
     )
     # Seed from the node table (not a literal row): a scan-derived
     # frontier keeps every level a real broadcast HASH join — a
@@ -535,18 +530,16 @@ def i12_mr_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     levels = frontier.select("node", F.lit(0).alias("dist"))
     for k in range(1, BFS_LEVELS + 1):
-        frontier = (
+        # Eager materialization per level (the i10 discipline):
+        # without it level k's broadcast re-executes the whole
+        # k−1-deep join lineage and the loop goes quadratic in
+        # depth. State is node-bounded.
+        frontier = persist(
             edges.join(
                 F.broadcast(frontier.withColumnRenamed("node", "src")), "src"
             )
             .select(F.col("dst").alias("node"))
             .distinct()
-            # Eager materialization per level (the i10 discipline):
-            # without it level k's broadcast re-executes the whole
-            # k−1-deep join lineage and the loop goes quadratic in
-            # depth. State is node-bounded; released by the registry
-            # wrapper before the next query.
-            .persist()
         )
         frontier.count()
         levels = levels.unionAll(frontier.select("node", F.lit(k).alias("dist")))
@@ -636,9 +629,11 @@ def i13_mr_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sym = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    ).persist()  # referenced once per round; edge-bounded
+    sym = persist(  # referenced once per round; edge-bounded
+        und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+            und.select(F.col("v").alias("a"), F.col("u").alias("b"))
+        )
+    )
 
     labels = n.select(
         F.col("n_nationkey").alias("node"), F.col("n_nationkey").alias("lbl")
@@ -653,17 +648,14 @@ def i13_mr_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("nl").alias("nmin"))
         )
-        labels = (
-            labels.join(F.broadcast(neighbor_min), "node", "left")
-            .select(
+        # Eager materialization per round (the i10 discipline):
+        # round k's two broadcasts would otherwise re-execute the
+        # whole k−1-deep lineage. One row per node.
+        labels = persist(
+            labels.join(F.broadcast(neighbor_min), "node", "left").select(
                 "node",
                 F.least(F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))).alias("lbl"),
             )
-            # Eager materialization per round (the i10 discipline):
-            # round k's two broadcasts would otherwise re-execute the
-            # whole k−1-deep lineage. One row per node; released by
-            # the registry wrapper before the next query.
-            .persist()
         )
         labels.count()
         if prev is not None:
@@ -788,13 +780,9 @@ def i14_mr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = und.filter(F.expr(_KCORE_THIN)).persist()
+    edges = persist(und.filter(F.expr(_KCORE_THIN)))
     # Eager: the unrolled peel references the edge list 8 times; one
     # materialization up front keeps the 4-way derivation single-run.
-    # The cache must OUTLIVE this function (the caller materializes
-    # the returned plan, which reads it); release point is the
-    # registry wrapper's clearCache at the start of the NEXT query
-    # (registry._wrap), bounding retention to one query's lifetime.
     edges.count()
 
     def degrees(nodes):

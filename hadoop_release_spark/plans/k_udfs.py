@@ -29,6 +29,7 @@ from pyspark.sql.types import DoubleType, LongType, StringType
 
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.contracts import py_round_half_away as _round_half_away
+from hadoop_release_spark.functions.materialize import temp_view
 from hadoop_release_spark.plans.registry import register
 
 
@@ -159,7 +160,7 @@ def k05_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("k05_expand_seq", Expand)
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1000)
-    o.createOrReplaceTempView("orders_k05")
+    temp_view(spark, "orders_k05", o)
     return spark.sql(
         "SELECT s.o_orderkey, s.seq "
         "FROM orders_k05, LATERAL k05_expand_seq(o_orderkey) s"

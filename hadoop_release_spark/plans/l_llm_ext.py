@@ -18,8 +18,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
-from hadoop_release_spark.functions.partitioning import spread_small_scan
 from hadoop_release_spark.functions.contracts import r3, r4
+from hadoop_release_spark.functions.materialize import lazy_local_checkpoint, persist
+from hadoop_release_spark.functions.partitioning import spread_small_scan
 from hadoop_release_spark.functions.vectors import cosine, dot, norm2, o_cosine
 from hadoop_release_spark.operators.dedup import (
     lsh_pair_calibration,
@@ -1581,8 +1582,8 @@ def l54_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("c12"))
     )
     # bg feeds three re-aggregations and the final join; persist so
-    # the bigram shuffle runs once (released by the registry wrapper).
-    bg = bg.persist()
+    # the bigram shuffle runs once.
+    bg = persist(bg)
     ctx = bg.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count("*").cast("long").alias("n1fwd"),
@@ -1765,9 +1766,8 @@ def _semdedup_from_assigned(assigned: DataFrame) -> DataFrame:
     )
 
     # assigned feeds both pair sides and the output spine; persist so
-    # the assignment pass runs once (released by the registry wrapper
-    # before the next query).
-    assigned = assigned.persist()
+    # the assignment pass runs once.
+    assigned = persist(assigned)
     # Pair stage as the per-cluster Arrow kernel (round 12 —
     # semdedup_pairs_arrow): the groupBy IS the cluster-keyed
     # corpus shuffle the hinted pair join paid (same exchange,
@@ -2112,9 +2112,8 @@ def l58_knn_self_imi(
     # self-join analyzer check (Dataset.alias does not clear it for
     # a shared-join lineage) and (b) would recompute the whole
     # two-level ranking once per side. Materializing it once is the
-    # CC-loop precedent; blocks are released by the registry-style
-    # cleanup at the next query.
-    return _l58_from_ranked(ranked.localCheckpoint(eager=False))
+    # CC-loop precedent.
+    return _l58_from_ranked(lazy_local_checkpoint(ranked))
 
 
 #: l76 bucket count for the cluster-bucketed IVF index. Local value;
@@ -2487,7 +2486,7 @@ def l62_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dbg feeds the model collapse AND the scoring join; persist so
     # the corpus-wide explode runs once (l54's argument).
-    dbg = dbg.persist()
+    dbg = persist(dbg)
     bg = dbg.groupBy("w1", "w2").agg(F.sum("n12").cast("long").alias("c12"))
     ctx = bg.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
@@ -2806,11 +2805,11 @@ def l67_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: btoks feeds THREE consumers (raw bucket counts, target
     # bucket counts, per-doc scoring) and each unmaterialized read
     # re-ran the tokenize+md5 explode. Persist (slim (id, lang,
-    # bucket) token rows; registry-released): interleaved A/B at
+    # bucket) token rows): interleaved A/B at
     # sf0.1/local[32] med 1.94 → 1.57 s, rows identical. At corpus
     # scale this is token-level state — MEMORY_AND_DISK spills to
     # local disk, still cheaper than two extra full tokenize passes.
-    btoks = btoks.persist()
+    btoks = persist(btoks)
     raw = btoks.groupBy("bucket").agg(
         F.count("*").cast("long").alias("nb_r")
     )
@@ -3209,10 +3208,10 @@ def l73_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join) — unpersisted, the whole l43 scoring pipeline (explode +
     # two aggs + token join + doc agg) replicated into every branch
     # and executed up to 3× (the captured before-plan carried 72
-    # Exchange nodes with zero reuse). Persist it (registry-released)
-    # so the scoring runs once; at 100 TB this is the difference
-    # between one corpus scoring pass and three.
-    scored = l43_lm_score(spark, sf_dir).join(d, "doc_id").persist()
+    # Exchange nodes with zero reuse). Persist it so the scoring runs
+    # once; at 100 TB this is the difference between one corpus
+    # scoring pass and three.
+    scored = persist(l43_lm_score(spark, sf_dir).join(d, "doc_id"))
     pp = scored.groupBy("lang", "avg_nll").agg(
         F.count("*").cast("long").alias("w")
     )

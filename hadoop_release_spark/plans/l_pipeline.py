@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
-from hadoop_release_spark.functions.materialize import eager_truncate
+from hadoop_release_spark.functions.materialize import eager_truncate, persist
 from hadoop_release_spark.functions.partitioning import spread_small_scan
 from hadoop_release_spark.operators.dedup import (
     gram_keys,
@@ -2364,8 +2364,7 @@ def l70_corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless per-row hashes. Each stage's input is the previous
     stage's survivor SEMI-JOIN — monotonically shrinking, so the
     expensive stages see the least data. ekept is persisted once
-    (spine of three consumers; released by the registry wrapper at
-    the next query — the lsh_pair_calibration contract)."""
+    (spine of three consumers)."""
     return _l70_impl(spark, sf_dir)
 
 
@@ -2411,9 +2410,7 @@ def _l70_impl(
     # per-materialization re-analysis (the i10 lesson; A/B at sf0.1:
     # min 7.44 → 4.91 s, ledger rows identical). The spine is slim
     # and its (curl,__h) partitioning is not reused downstream, so
-    # nothing is lost to checkpoint's partitioning drop; blocks are
-    # released by the registry wrapper's unpersist sweep (same
-    # error-on-reuse-after-next-query contract as the CC loop).
+    # nothing is lost to checkpoint's partitioning drop.
     umap = eager_truncate(
         fetch.join(usurv, ["curl", "__h"]).select("doc_id", "__h", "u_surv")
     )
@@ -2429,11 +2426,13 @@ def _l70_impl(
         .join(esurv, "__h")
         .select("doc_id", "e_surv")
     )
-    ekept = d.join(
-        emap.filter(F.col("doc_id") == F.col("e_surv")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    ).persist()
+    ekept = persist(
+        d.join(
+            emap.filter(F.col("doc_id") == F.col("e_surv")).select("doc_id"),
+            "doc_id",
+            "left_semi",
+        )
+    )
     pairs = lsh_candidate_pairs(ekept, "doc_id", "text")
     # nkill feeds THREE consumers (the near_dup ledger branch, the
     # semantic stage's survivor semi-join, and the kept spine) — a
@@ -2751,8 +2750,8 @@ def l72_bloom_gram_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cgrams = _grams(corpus).select("g").distinct()
     # cgrams feeds the bitmap build AND the exact verify — persist so
-    # the corpus gram explode+distinct runs once (registry-released).
-    cgrams = cgrams.persist()
+    # the corpus gram explode+distinct runs once.
+    cgrams = persist(cgrams)
     # r16: no .distinct() on the positions — bit_or is idempotent, so
     # duplicate positions cannot change any mask word and the partial
     # (map-side) bit_or already shrinks them; the distinct's own
@@ -3164,7 +3163,7 @@ def l75_bloom_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cgrams = _grams(corpus).select("g").distinct()
     # Feeds the bitmap build AND the (gated) exact verify — persist
     # so the corpus gram explode+distinct runs once.
-    cgrams = cgrams.persist()
+    cgrams = persist(cgrams)
     # r16: no .distinct() on positions — bit_or is idempotent (see
     # l72); drops one exchange, masks identical.
     cpos = cgrams.select(
@@ -3209,10 +3208,10 @@ def l75_bloom_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-doc gram count — so the incoming gram kernel and the
     # bit-test subtree run ONCE (previously perdoc re-ran the gram
     # explode as a second kernel pass). Slim rows (id, 16-byte
-    # digest, int), sized by the ingest batch, registry-released.
-    gflags = (
+    # digest, int), sized by the ingest batch.
+    gflags = persist(
         bits.groupBy("doc_id", "g").agg(F.min("hit").alias("pass"))
-    ).persist()
+    )
     # THE GATE: only bloom-pass grams reach the corpus-sized verify
     # join (l72 verifies all grams to score FPR; production doesn't).
     passg = gflags.filter(F.col("pass") == 1).select("doc_id", "g")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
+from hadoop_release_spark.functions.materialize import persist
 from hadoop_release_spark.operators.multimodal import (
     attach_audio_payload,
     audio_zero_crossings,
@@ -487,8 +488,8 @@ def m09_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hashes = image_ahash(d).select("doc_id", "ahash_lo", "ahash_hi")
     # hashes feeds the band explode and both verify sides; persist so
-    # the Python decode stage runs once (released by the wrapper).
-    hashes = hashes.persist()
+    # the Python decode stage runs once.
+    hashes = persist(hashes)
     banded = hashes.select(
         "doc_id",
         F.posexplode(
@@ -656,8 +657,8 @@ def m10_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # fps feeds both pair sides and the size table; persist so the
-    # Python decode stage runs once (released by the wrapper).
-    fps = fps.persist()
+    # Python decode stage runs once.
+    fps = persist(fps)
     sizes = fps.groupBy("doc_id").agg(F.count("*").cast("long").alias("nf"))
     a = fps.select(F.col("doc_id").alias("doc_a"), "lo", "hi")
     b = fps.select(F.col("doc_id").alias("doc_b"), "lo", "hi")
@@ -792,8 +793,8 @@ def m11_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fps = sh.distinct()
     # fps feeds both pair sides and the size table; persist so the
-    # Python decode stage runs once (released by the wrapper).
-    fps = fps.persist()
+    # Python decode stage runs once.
+    fps = persist(fps)
     sizes = fps.groupBy("doc_id").agg(F.count("*").cast("long").alias("ns"))
     a = fps.select(F.col("doc_id").alias("doc_a"), "key")
     b = fps.select(F.col("doc_id").alias("doc_b"), "key")

@@ -18,12 +18,13 @@ being oracle-checked.
 from __future__ import annotations
 
 import json
-import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hadoop_release_spark.functions.materialize import release
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -38,25 +39,6 @@ class QuerySpec:
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
-
-#: Interactive-session switch (round-8 judge note): the wrapper's
-#: release-at-next-query discipline frees EVERY persisted block and
-#: cached plan in the session — correct for the driver's grading
-#: loop and bench (the only long-lived flows, where it bounds a
-#: 328-query sweep to one query's working set), but a footgun for a
-#: notebook user who persists their own frames between registry
-#: calls. Interactive callers flip this ON to take cache management
-#: into their own hands: the wrapper then releases NOTHING and the
-#: caller unpersists operator caches (documented per operator, e.g.
-#: operators/dedup.py lsh_pair_calibration) when done.
-INTERACTIVE_MODE = False
-
-
-def set_interactive_mode(on: bool) -> None:
-    """Enable/disable the wrapper's blanket cache release (see
-    :data:`INTERACTIVE_MODE`)."""
-    global INTERACTIVE_MODE
-    INTERACTIVE_MODE = on
 
 
 def register(name: str, oracle: str | None = None, priority: str = "P1"):
@@ -86,95 +68,15 @@ def specs() -> dict[str, QuerySpec]:
 
 
 def _wrap(fn: QueryFn) -> QueryFn:
-    """Release the PREVIOUS query's persisted intermediates before
-    running the next one. A few operators legitimately persist
-    (rank.global_row_number, the LSH sketch table, CC labels) and the
-    cache must outlive the function — the external driver
-    materializes the returned DataFrame after we return — so the
-    release point is the start of the NEXT query: accumulation over a
-    full-registry session (329 active queries at round 9) is bounded
-    to one query's working set. (tests/test_contract.py pins this.)"""
+    """Release the PREVIOUS query's owned intermediates (persists,
+    checkpoints, temp views — functions/materialize.py) before running
+    the next one. The release point is the start of the next query
+    because the external driver materializes the returned DataFrame
+    after we return; a full-registry session is thereby bounded to one
+    query's working set (tests/test_contract.py pins this)."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        if INTERACTIVE_MODE:
-            # Caller owns cache lifetime (see INTERACTIVE_MODE).
-            return fn(spark, sf_dir)
-        # Each cleanup step gets its OWN narrow try/except (round-8
-        # advisor): a failure in one (e.g. Spark Connect lacking the
-        # _jsc gateway, or an RDD freed concurrently) must not
-        # silently skip the OTHERS — that would quietly re-introduce
-        # the accumulation leak this wrapper exists to fix — and must
-        # leave a log signal rather than pass silently.
-        try:
-            spark.catalog.clearCache()
-        except Exception as exc:  # pragma: no cover - env-specific
-            warnings.warn(f"registry cleanup: clearCache failed: {exc!r}")
-        # clearCache drops CACHED plans but NOT localCheckpoint
-        # blocks (the CC loop's per-round lineage truncation,
-        # round-8 rework) — release those explicitly or a long
-        # grading session accumulates one edge/label set per
-        # dedup query. Post-release, the PREVIOUS query's
-        # returned frame must not be re-materialized (its
-        # lineage was truncated to the freed blocks) — same
-        # release-at-next-query contract as the cache line
-        # above, just error-on-reuse instead of slow-on-reuse.
-        # (py4j exposes the Java map as a dict view). The scala-side
-        # isEmpty probe short-circuits the common no-persist case —
-        # the map→dict conversion alone cost ~30-50 ms per query
-        # (measured r15), paid inside every bench/grading timing.
-        try:
-            if not spark.sparkContext._jsc.sc().getPersistentRDDs().isEmpty():
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    rdd.unpersist()
-        except Exception as exc:  # pragma: no cover - env-specific
-            warnings.warn(f"registry cleanup: RDD unpersist failed: {exc!r}")
-        # Streaming memory sinks register stream_out_* temp views
-        # (streaming/runner.materialize) that clearCache does NOT
-        # release — drop the previous query's here so full result
-        # tables cannot accumulate across a long grading session
-        # (self-review find). The runner tracks the names it
-        # registered, so this is a targeted drop, not a full catalog
-        # listTables() scan (~100 ms per query, measured r15).
-        try:
-            from hadoop_release_spark.streaming import runner as _stream_runner
-
-            kept = []
-            while _stream_runner._LIVE_VIEWS:
-                ref, name = _stream_runner._LIVE_VIEWS.pop()
-                owner = ref()
-                if owner is None:
-                    continue  # session gone; its temp views died with it
-                if owner is not spark:
-                    # r15 ADVICE: a view owned by ANOTHER live session
-                    # must not be popped here — dropTempView on this
-                    # session would return False and the view would
-                    # leak permanently in its owner.
-                    kept.append((ref, name))
-                    continue
-                try:
-                    spark.catalog.dropTempView(name)
-                except Exception:
-                    # keep the name so a later sweep can retry instead
-                    # of losing track of the view (r15 ADVICE)
-                    kept.append((ref, name))
-                    raise
-            _stream_runner._LIVE_VIEWS.extend(kept)
-        except Exception as exc:  # pragma: no cover - env-specific
-            warnings.warn(f"registry cleanup: view drop failed: {exc!r}")
-        # Operator-internal persist registry (r15 ADVICE): the RDD
-        # sweep above already freed the blocks; clear the Python-side
-        # list too or a long grading session accumulates DataFrame
-        # objects + py4j-pinned JVM plans (and a later direct caller's
-        # release_internal_persists() would unpersist frames belonging
-        # to unrelated earlier queries).
-        try:
-            from hadoop_release_spark.operators import similarity as _sim
-
-            _sim._INTERNAL_PERSISTS.clear()
-        except Exception as exc:  # pragma: no cover - env-specific
-            warnings.warn(
-                f"registry cleanup: internal-persist drain failed: {exc!r}"
-            )
+        release()
         return fn(spark, sf_dir)
 
     wrapped.__doc__ = fn.__doc__
@@ -273,17 +175,6 @@ def grading_order(names: list[str]) -> list[str]:
     history = _grade_history()
     tier = {name: t for t, tier_names in _GRADING_COST_TIERS for name in tier_names}
 
-    def _tier(n: str) -> int:
-        if n in _ROUND9_PLUS_ADDITIONS:
-            return 6
-        if n in _ROUND8_PLUS_ADDITIONS:
-            return 5
-        if n in _ROUND7_PLUS_ADDITIONS:
-            return 4
-        if n in _ROUND6_PLUS_ADDITIONS:
-            return 3
-        return tier.get(n, 1)
-
     def _staleness(n: str) -> int:
         # Rewritten-after-grade → stalest possible (still behind the
         # never-graded front via the `n in history` key).
@@ -292,7 +183,7 @@ def grading_order(names: list[str]) -> list[str]:
         return history.get(n, 0)
 
     return sorted(
-        names, key=lambda n: (n in history, _staleness(n), _tier(n), n)
+        names, key=lambda n: (n in history, _staleness(n), tier.get(n, 1), n)
     )
 
 
@@ -322,144 +213,9 @@ def grading_order(names: list[str]) -> list[str]:
 #: exchange fix (l02/l22/l68/l30/l70) + l74/l72/l75 (positional /
 #: word-gram digest kernels): ALL regraded hash-green by the r13
 #: driver window, post-rewrite (CORRECTNESS_r13.json, 12/12) —
-#: pruned round 14.
-_PLAN_REWRITES: dict[str, int] = {
-    # round-14: _shingles3 (l13's gram expression) gained the
-    # sub-3-token guard branch (ADVICE item 2 — the descending
-    # sequence/element_at(0) latent crash). Values identical for
-    # every ≥3-token doc and the fixture corpus contains only
-    # those, but the GRADED EXPRESSION changed, so the official
-    # grade must be refreshed post-change. No r14 grade at change
-    # time → recorded as 14 per the convention above.
-    "l13_ngram_jaccard": 14,
-}
-
-
-#: Queries REGISTERED in round 8 or later: tier 5, behind every
-#: earlier-registered query so a new op never displaces a pending or
-#: staler re-grade row within its registration round's window. (With
-#: all 295 pre-round-8 rows already green, these never-graded ids
-#: still sort FIRST overall — the window grades them immediately,
-#: then fills the remaining slots with the stalest re-grades.)
-#: Queries REGISTERED in round 9 or later: tier 6, behind every
-#: earlier-registered query (same discipline as the round-7/8 sets:
-#: a new op never displaces a pending or staler re-grade row).
-_ROUND9_PLUS_ADDITIONS: frozenset[str] = frozenset({
-    "a19_dynamic_partition_overwrite",
-    "d45_anova",
-    "d46_spearman",
-    "d47_nelson_aalen",
-    "d48_concentration",
-    "d49_jensen_shannon",
-    "d50_mann_kendall",
-    "d51_ljung_box",
-    "e43_seasonal_adjust",
-    "e44_holt_trend",
-    "e45_changepoint",
-    "e46_seasonal_strength",
-    "f07_diversified_topk",
-    "g09_symmetric_diff",
-    "g10_relational_division",
-    "j13_stream_token_bucket",
-    "l65_temperature_mix",
-    "l66_containment_dedup",
-    "l67_dsir_weights",
-    "l68_minhash_calibration",
-    "l69_langid_confusion",
-    "m12_image_dup_survivors",
-    "l70_corpus_pipeline_v2",
-    "e47_entity_changepoint",
-    "l71_ivf_pq",
-    "l72_bloom_gram_gate",
-    "m13_video_dup_survivors",
-    "m14_audio_dup_survivors",
-    "e48_entity_seasonal_adjust",
-    "l73_perplexity_buckets",
-    # round 11
-    "l75_bloom_gated_ingest",
-    # round 12
-    "l76_knn_self_bucketed",
-})
-
-
-_ROUND8_PLUS_ADDITIONS: frozenset[str] = frozenset({
-    "d44_theil_sen_hourly",
-    "e42_entity_robust_anomaly_days",
-    "k12_token_bucket",
-    "l64_corpus_diff_drilldown",
-})
-
-
-#: Queries REGISTERED in round 7 or later: tier 4, BEHIND the 47
-#: round-6 additions that exactly fill round 7's grading window
-#: (round-6 verdict item 2) — the 50-slot window grades 47 + up to
-#: 3 of these; any overflow waits for round 8 instead of displacing
-#: a never-graded round-6 row.
-_ROUND7_PLUS_ADDITIONS: frozenset[str] = frozenset({
-    "d43_theil_sen",
-    "l63_quality_calibration",
-    "e41_robust_anomaly_days",
-})
-
-
-#: Queries REGISTERED in round 6 or later. The round-6 driver window
-#: must grade exactly the 49 queries never graded in r1–r5 (they are
-#: one full window; VERDICT r5 item 2), so anything registered after
-#: that point sorts BEHIND every pre-round-6 never-graded query —
-#: tier 3 — and waits for the next round's window instead of
-#: displacing one of the 49. Add every new contract query here until
-#: CORRECTNESS shows 244/244.
-_ROUND6_PLUS_ADDITIONS: frozenset[str] = frozenset({
-    "j11_stream_stateful_tws",
-    "a17_scan_binaryfile",
-    "l47_pq_ann",
-    "l48_semantic_decontaminate",
-    "l49_hard_negative_mining",
-    "m07_audio_fingerprint",
-    "e31_time_weighted_avg",
-    "s10_python_datasource_stream",
-    "m08_video_scene_cut",
-    "d34_mad",
-    "l50_span_corruption",
-    "k10_udaf_window",
-    "a18_scan_file_metadata",
-    "e32_new_vs_returning",
-    "l52_ngram_novelty",
-    "l53_fim_transform",
-    "e33_ohlc_bars",
-    "s11_countmin_sketch",
-    "i16_mr_cooccurrence",
-    "d36_winsorized_mean",
-    "j12_stream_dynamic_session",
-    "e34_peak_concurrency",
-    "d35_mann_whitney",
-    "l54_kneser_ney",
-    "l55_tokenizer_fertility",
-    "l56_semdedup",
-    "m09_phash_near_dup",
-    "e35_max_drawdown",
-    "l57_mlm_masking",
-    "d37_poisson_bootstrap",
-    "f06_skyline",
-    "m10_video_near_dup",
-    "k11_cogrouped_map",
-    "d38_kaplan_meier",
-    "d39_psi_drift",
-    "e36_rolling_ols",
-    "m11_audio_near_dup",
-    "l58_knn_self_join",
-    "e37_inter_event_gaps",
-    "l59_preference_pairs",
-    "d40_tukey_outliers",
-    "e38_top_paths",
-    "d41_weighted_quantiles",
-    "d42_two_proportion_ztest",
-    "l60_rendezvous_sharding",
-    "e39_autocorrelation",
-    "l61_shard_manifest",
-    "e40_hour_of_week_profile",
-    "l62_kn_perplexity",
-})
+#: pruned round 14. r14 rewrite l13 (sub-3-token guard in _shingles3),
+#: regraded in r14 — pruned after round 16.
+_PLAN_REWRITES: dict[str, int] = {}
 
 
 #: (tier, names) — the within-group secondary sort key only (the

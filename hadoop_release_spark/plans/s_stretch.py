@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
+from hadoop_release_spark.functions.materialize import temp_view
 from hadoop_release_spark.plans.registry import register
 
 #: s01 — configured HLL++ relative standard deviation; the published
@@ -270,7 +271,7 @@ def s09_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
     |lineitem|); top-5 filter fuses into the window stage. Views over
     100 TB paths behave identically — temp views are metadata only."""
     for name in ("lineitem", "orders", "customer"):
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+        temp_view(spark, name, table(spark, sf_dir, name))
     return spark.sql(_S09_SQL)
 
 

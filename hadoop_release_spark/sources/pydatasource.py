@@ -159,5 +159,19 @@ class DocumentsDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the source with a session."""
-    spark.dataSource.register(DocumentsDataSource)
+    """Idempotent registration of the source with a session.
+
+    Spark checks for an existing source in the ACTIVE session, so on a
+    ``newSession()`` it would find the first session's registration,
+    raise DATA_SOURCE_ALREADY_EXISTS, and leave ``docsrc`` unresolvable
+    in the new session. ``spark`` is made active for the call."""
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(DocumentsDataSource)
+    finally:
+        if prev.isDefined():
+            jsession.setActiveSession(prev.get())
+        else:
+            jsession.clearActiveSession()

@@ -37,30 +37,17 @@ checkpoint — choose it before the first run.
 from __future__ import annotations
 
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from hadoop_release_spark.catalog import normalize_events
+from hadoop_release_spark.functions.materialize import temp_view
 from hadoop_release_spark.session import ensure_configs
 
 #: Shuffle/state partitions used while materializing fixture-scale
 #: streams (see module docstring).
 FIXTURE_STREAM_PARTITIONS = 8
-
-#: Memory-sink temp views registered by :func:`materialize` and not
-#: yet dropped, as (session weakref, name) pairs. The registry
-#: wrapper drains this list (targeted dropTempView per name) instead
-#: of scanning the whole catalog with listTables(), which measured
-#: ~100 ms per query (r15) — a fixed tax every non-streaming query
-#: paid too. Pairs, not bare names (r15 ADVICE): temp views are
-#: SESSION-scoped while this list is process-global, so a wrapper
-#: running on a DIFFERENT session must not pop (and thereby leak) a
-#: view owned by another session — the wrapper only drops entries
-#: whose session is the current one (dead-session entries are
-#: discarded; their views died with the session).
-_LIVE_VIEWS: list[tuple["weakref.ref[SparkSession]", str]] = []
 
 #: (sf_dir, file mtime_ns) → events schema; the batch-side probe is
 #: identical per directory, so one read serves every streaming query
@@ -156,7 +143,8 @@ class scoped_stream_partitions:
 
 def materialize(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Run the stream to completion (availableNow) into a memory sink
-    and return the final table.
+    and return the final table. The sink's ``stream_out_*`` temp view
+    is owned until ``functions.materialize.release()``.
 
     Scopes ``spark.sql.shuffle.partitions`` to the fixture-sized value
     for the duration of the run (state stores are per-partition; see
@@ -167,7 +155,7 @@ def materialize(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """
     spark = stream_df.sparkSession
     name = "stream_out_" + uuid.uuid4().hex[:12]
-    _LIVE_VIEWS.append((weakref.ref(spark), name))
+    temp_view(spark, name)
     with scoped_stream_partitions(spark):
         query = (
             stream_df.writeStream.outputMode(output_mode)

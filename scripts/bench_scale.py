@@ -173,26 +173,14 @@ DEDUP_TAIL = [
 
 
 def _extra_queries():
-    from hadoop_release_spark.plans.l_llm_ext import l56_semdedup_imi
+    from hadoop_release_spark.plans.l_llm_ext import (
+        l56_semdedup_imi,
+        l58_knn_self_imi,
+    )
     from hadoop_release_spark.plans.l_pipeline import (
         l70_corpus_pipeline_v2_imi,
     )
-
-    def wrap(fn):
-        def run(spark, sf_dir):
-            spark.catalog.clearCache()
-            try:
-                for rdd in (
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    rdd.unpersist()
-            except Exception:
-                pass
-            return fn(spark, sf_dir)
-
-        return run
-
-    from hadoop_release_spark.plans.l_llm_ext import l58_knn_self_imi
+    from hadoop_release_spark.plans.registry import _wrap as wrap
 
     return {
         "l56_semdedup_imi": wrap(l56_semdedup_imi),

@@ -20,6 +20,7 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from hadoop_release_spark.catalog import table  # noqa: E402
+from hadoop_release_spark.functions.materialize import release  # noqa: E402
 from hadoop_release_spark.session import get_session  # noqa: E402
 
 
@@ -191,7 +192,7 @@ def main() -> None:
             print(f"n_candidates={n_cand} n_ekept={ekept.count()}", flush=True)
         for f in (candp, basep, ekept):
             f.unpersist()
-        spark.catalog.clearCache()
+        release()  # the full l70 run's own intermediates
 
     print(f"\n{'label':55s} {'min':>7s} {'med':>7s}  (n={reps})")
     for label, ts in timings.items():

@@ -212,43 +212,54 @@ def test_entry_smoke(spark):
 
 def test_persists_do_not_accumulate_across_queries(spark, sf_dir):
     """The queries() wrappers release the previous query's persisted
-    intermediates (rank offsets, LSH sketch tables, CC labels) at the
-    start of the next query, so a full-registry sweep in one shared
-    session is bounded to ONE query's working set — never a growing
-    cache. Run the known-persisting queries back-to-back, then a
-    plain one, and assert nothing stays cached."""
+    intermediates (rank offsets, LSH sketch tables, CC labels, i10's
+    per-iteration checkpoints) at the start of the next query, so a
+    full-registry sweep in one shared session is bounded to ONE
+    query's working set — never a growing cache. Run the
+    known-persisting queries back-to-back, then a plain one, and
+    assert nothing stays cached: no persisted RDD, no cached plan."""
     import __spark_entry__ as e
 
     qs = e.queries()
-    for name in ["f04_total_order_sort", "l02_dedup_near", "l22_dedup_survivors"]:
+    for name in [
+        "f04_total_order_sort",
+        "l02_dedup_near",
+        "l22_dedup_survivors",
+        "i10_mr_pagerank",
+    ]:
         qs[name](spark, sf_dir).count()
     jsc = spark.sparkContext._jsc.sc()
     assert jsc.getPersistentRDDs().size() > 0  # the last query's set is live
     qs["b01_project_columns"](spark, sf_dir).count()
     assert jsc.getPersistentRDDs().size() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_stream_views_do_not_accumulate_across_queries(spark, sf_dir):
-    """r15: the wrapper's stream_out_* view release became a targeted
-    drop of runner-tracked names (the full listTables() scan cost
-    ~100 ms on EVERY query). Pin the behavior the old scan provided:
-    a streaming query's memory-sink view exists after the query (the
-    driver materializes it), and the NEXT wrapped query drops it."""
+    """A streaming query's memory-sink view (stream_out_*) is owned
+    through functions/materialize.py: it exists after the query (the
+    driver materializes it), and the NEXT wrapped query drops it —
+    a targeted drop of the recorded name, not a catalog scan."""
     import __spark_entry__ as e
-    from hadoop_release_spark.streaming import runner
+    from hadoop_release_spark.functions import materialize
+
+    def stream_views():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith("stream_out_")
+        }
 
     qs = e.queries()
     qs["j01_stream_tumbling"](spark, sf_dir).count()
-    assert runner._LIVE_VIEWS, "runner did not track the memory-sink view"
-    live = [name for ref, name in runner._LIVE_VIEWS]
-    owners = [ref() for ref, name in runner._LIVE_VIEWS]
-    assert all(o is spark for o in owners), "view owner must be the session"
-    for name in live:
-        assert spark.catalog.tableExists(name)
+    live = stream_views()
+    assert live, "j01 registered no memory-sink view"
+    owned = {what for what, _ in materialize._OWNED}
+    assert {f"temp view {name}" for name in live} <= owned, (
+        "memory-sink view not recorded for release"
+    )
     qs["b01_project_columns"](spark, sf_dir).count()
-    assert not runner._LIVE_VIEWS, "wrapper did not drain tracked views"
-    for name in live:
-        assert not spark.catalog.tableExists(name), f"view {name} leaked"
+    assert not stream_views(), "wrapper did not drop the stream views"
 
 
 def test_survey_section2_matches_registry():
@@ -299,44 +310,42 @@ def test_avro_conditional_registration_consistent(spark, sf_dir):
         assert sorted(map(tuple, out.collect())) == sorted(map(tuple, src.collect()))
 
 
-def test_interactive_mode_preserves_user_caches(spark, sf_dir):
-    """INTERACTIVE_MODE=True must make the registry wrapper a pure
-    pass-through: a frame the USER persisted survives a registry
-    query. With the flag off (the grading default), the same frame
-    is released at the next wrapped call — the accumulation bound
-    the driver loop depends on."""
+def test_user_caches_survive_registry_queries(spark, sf_dir):
+    """The registry wrapper releases only what the queries themselves
+    created: a frame the USER persisted survives wrapped registry
+    queries, while the query's own persists are released at the next
+    wrapped call."""
     from hadoop_release_spark.plans import registry
 
+    jsc = spark.sparkContext._jsc
+    qs = registry.all_queries()
+    qs["b01_project_columns"](spark, sf_dir).toPandas()  # clean slate
+    before = set(jsc.getPersistentRDDs().keys())
     user_df = spark.range(100).persist()
     user_df.count()
-    rdd_ids = set(
-        spark.sparkContext._jsc.getPersistentRDDs().keys()
-    )
-    assert rdd_ids, "user persist did not register"
-    q = registry.all_queries()["b01_project_columns"]
+    user_ids = set(jsc.getPersistentRDDs().keys()) - before
+    assert user_ids, "user persist did not register"
     try:
-        registry.set_interactive_mode(True)
-        q(spark, sf_dir).toPandas()
-        surviving = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keys()
-        )
-        assert rdd_ids <= surviving, "interactive mode released user cache"
+        qs["f04_total_order_sort"](spark, sf_dir).toPandas()
+        query_ids = set(jsc.getPersistentRDDs().keys()) - before - user_ids
+        assert query_ids, "f04 persisted nothing"
+        qs["b01_project_columns"](spark, sf_dir).toPandas()
+        surviving = set(jsc.getPersistentRDDs().keys())
+        assert user_ids <= surviving, "wrapper released the user's cache"
+        assert not (surviving & query_ids), "query persists not released"
     finally:
-        registry.set_interactive_mode(False)
-    # default mode: the next wrapped call releases everything
-    q(spark, sf_dir).toPandas()
-    assert not (
-        set(spark.sparkContext._jsc.getPersistentRDDs().keys()) & rdd_ids
-    ), "grading mode failed to release"
+        user_df.unpersist()
 
 
 def test_eager_truncate_modes_identical(spark, tmp_path):
     """functions.materialize.eager_truncate must (a) pick reliable
     checkpoint() when a checkpoint dir is configured and
     localCheckpoint otherwise, (b) produce identical rows in both
-    modes, and (c) be eager + lineage-truncating in both (the loop
-    operators' contract — i10/l70/CC ride this helper)."""
-    from hadoop_release_spark.functions.materialize import eager_truncate
+    modes, (c) be eager + lineage-truncating in both (the loop
+    operators' contract — i10/l70/CC ride this helper), and (d) have
+    release() free what it made in both modes: the local checkpoint's
+    blocks and the reliable checkpoint's rdd-* files."""
+    from hadoop_release_spark.functions.materialize import eager_truncate, release
     from pyspark.sql import functions as F
 
     src = spark.range(1000).select(
@@ -349,6 +358,10 @@ def test_eager_truncate_modes_identical(spark, tmp_path):
     # truncated lineage: the logical plan no longer embeds the agg
     assert "LogicalRDD" in local._jdf.queryExecution().logical().toString()
     rows_local = sorted(map(tuple, local.collect()))
+    local_rdd = local._jdf.logicalPlan().rdd().id()
+    assert local_rdd in set(sc._jsc.getPersistentRDDs().keys())
+    release()
+    assert local_rdd not in set(sc._jsc.getPersistentRDDs().keys())
 
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
@@ -359,10 +372,40 @@ def test_eager_truncate_modes_identical(spark, tmp_path):
             "reliable checkpoint() (no files appeared in the dir)"
         )
         assert sorted(map(tuple, reliable.collect())) == rows_local
+        assert list((tmp_path / "ckpt").glob("*/rdd-*"))
+        release()
+        assert not list((tmp_path / "ckpt").glob("*/rdd-*")), (
+            "release() left reliable-checkpoint data behind"
+        )
     finally:
         # restore the no-dir default so later tests keep the
         # localCheckpoint behavior this session was built with
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(
             sc._jvm.scala.Option.apply(None)
         )
-    assert sc.getCheckpointDir() is None
+        # checked even when the body failed: a dir left behind would
+        # silently flip every later test to reliable checkpoints
+        assert sc.getCheckpointDir() is None
+
+
+def test_owned_resources_created_only_through_materialize():
+    """Every persist, checkpoint and temp view in the engine goes
+    through functions/materialize.py, which records it for release();
+    a direct call anywhere else would create a resource nothing frees."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "hadoop_release_spark"
+    owner = pkg / "functions" / "materialize.py"
+    pattern = re.compile(
+        r"\.persist\(|\.cache\(\)|\.localCheckpoint\(|\.checkpoint\("
+        r"|createOrReplaceTempView\(|createTempView\("
+    )
+    offenders = [
+        f"{path.relative_to(pkg.parent)}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != owner
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, "\n".join(offenders)

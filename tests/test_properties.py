@@ -4585,9 +4585,9 @@ def test_minhash_calibration_matches_reference(
         # operators/dedup.py docstring); hypothesis runs this body
         # dozens of times per session, so release here or the blocks
         # accumulate one shingle pass per example.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        from hadoop_release_spark.functions.materialize import release
+
+        release()
 
 
 @settings(**_SETTINGS)
@@ -5094,9 +5094,9 @@ def test_corpus_pipeline_v2_matches_reference(spark, docs, tmp_path_factory):
         # times per session, so release here or the blocks accumulate
         # one pipeline working set per example — the same fix the
         # l68 calibration test above carries.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        from hadoop_release_spark.functions.materialize import release
+
+        release()
 
 
 @settings(**_SETTINGS)
@@ -5185,9 +5185,9 @@ def test_exact_substring_matches_reference(spark, docs, tmp_path_factory):
         # l74 persists the guarded gram table past the call by
         # contract (released by the registry wrapper in production);
         # hypothesis reruns this body — release per example.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        from hadoop_release_spark.functions.materialize import release
+
+        release()
 
 
 @settings(**_SETTINGS)

@@ -991,24 +991,23 @@ def test_two_level_imi_mode_total_assignment(spark, sf_dir):
 def test_two_level_internal_persists_released(spark, sf_dir):
     """r15 (r14 advisor): the IMI functions persist their slim
     coarse-ranking frame internally, and they are NOT registry rows —
-    a direct library caller had no way to free those blocks. Pin the
-    fix: the persist is registered in _INTERNAL_PERSISTS, and
-    release_internal_persists() leaves the session with no persisted
+    a direct library caller must still be able to free those blocks.
+    Pin it: the persist is recorded in functions/materialize.py's
+    owned list, and release() leaves the session with no persisted
     RDDs."""
+    from hadoop_release_spark.functions import materialize
     from hadoop_release_spark.operators.similarity import (
-        _INTERNAL_PERSISTS,
         assign_clusters_two_level,
-        release_internal_persists,
     )
 
-    release_internal_persists()  # clean slate from earlier tests
+    materialize.release()  # clean slate from earlier tests
     spark.catalog.clearCache()
     e = table(spark, sf_dir, "embeddings")
     out = assign_clusters_two_level(e, 64, stride=4, nprobe=2)
     out.count()  # materialize → the internal persist is live
-    assert _INTERNAL_PERSISTS, "IMI persist was not registered"
-    release_internal_persists()
-    assert not _INTERNAL_PERSISTS
+    assert materialize._OWNED, "IMI persist was not recorded"
+    materialize.release()
+    assert not materialize._OWNED
     # the operator-internal block is gone (the caller's own frames
     # were never persisted here, so the session cache must be empty)
     jsc = spark.sparkContext._jsc.sc()
