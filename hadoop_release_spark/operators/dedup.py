@@ -21,6 +21,8 @@ LCG — no runtime randomness (SURVEY.md §7 hard-part #4).
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -43,28 +45,6 @@ LSH_SHINGLE_K = 3
 LSH_NUM_HASHES = 64
 LSH_BANDS = 16
 LSH_JACCARD_THRESHOLD = 0.3
-
-#: Round-14 ADVICE item 1 — the boilerplate-gram df guards in
-#: l28/l66/l74 compute document frequency as a WINDOW over the one
-#: gram-keyed exchange (round-13 form: no second corpus pass, AQE
-#: reuses the shuffle stage). The trade: a hotter-than-the-cap gram
-#: buffers its ENTIRE posting list inside one WindowExec partition
-#: group on a single task before the filter drops it, and AQE
-#: skew-splitting does not apply to window partitions — at corpus
-#: scale each boilerplate gram becomes a straggler/spill task in
-#: exactly the place the guard exists to protect. ``"agg"`` selects
-#: the documented exit: the two-pass form (groupBy gram →
-#: map-side-combined partial counts → semi-join the under-cap gram
-#: set back), which shrinks hot grams map-side at the cost of a
-#: second (slim, gram+count) exchange. Results are IDENTICAL —
-#: pinned by test_pipeline_ops/test_llm_ops equality tests toggling
-#: this flag. Default stays "window": at fixture/bench scale the
-#: reused-exchange form measures faster, and gen_sf's bounded phrase
-#: pool keeps posting lists ≤ a few thousand rows; flip to "agg"
-#: (or set per-deployment) where the corpus carries crawl
-#: boilerplate/license templates with million-row posting lists.
-DF_GUARD_FORM = "window"
-
 
 def _hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs from a fixed LCG — reproducible
@@ -158,7 +138,6 @@ def gram_keys(text: Column, k: int, short_doc: str = "whole_text") -> Column:
     (tests/test_pipeline_ops.py::test_gram_keys_bijects_with_word_shingles
     + a hypothesis property) — value equality is impossible by
     design, equality-class equality is the whole contract."""
-    import hashlib
     from itertools import chain
 
     if short_doc not in ("whole_text", "empty"):
@@ -234,94 +213,81 @@ def gram_keys(text: Column, k: int, short_doc: str = "whole_text") -> Column:
     return _gk(text)
 
 
-def shingle_sketch(text: Column, k: int = LSH_SHINGLE_K) -> Column:
-    """``struct<shingles: array<string>, hashes: array<long>>`` —
-    the Arrow-kernel hot form of
-    ``word_shingles(text, k)`` + ``shingle_hashes(...)`` producing
-    BIT-IDENTICAL values (unlike :func:`gram_keys`, these values
-    are oracle-replayed: the hashes feed the MinHash math and the
-    shingle strings feed exact-Jaccard verification, so contract
-    rule 6 binds and the kernel must reproduce the md5 numbers
-    exactly — ``int(md5(gram)[:15 hex], 16) % P``, first-occurrence
-    distinct order, whole-text fallback under k tokens, [NULL] for
-    null text).
+def _doc_grams(text: str | None, k: int, distinct: bool, short_doc: str):
+    """The k-word grams of ONE doc — the single enumeration behind
+    every md5 gram kernel below, so null, empty, short-doc and
+    non-ASCII text get one semantics. Tokens are ``text.split(" ")``
+    (Spark's ``split(text, ' ')``: ``""`` is one empty token; any
+    unicode token passes through as-is). Null text → ``None``.
 
-    Why: profiled on gen_sf sf1 (round 13), the interpreted
-    word_shingles string-building lambda was ~18 s of l02's ~30 s
-    wall (the md5+conv projection itself is cheap JVM-side; the
-    per-position array_join/slice interpretation is not). The
-    kernel builds the same strings with python slicing and
-    memoizes the md5 per distinct gram per batch. Value parity is
-    pinned array-for-array against the expression forms
-    (tests/test_llm_ops.py::test_shingle_sketch_equals_expression
-    + a hypothesis property)."""
-    import hashlib
+    With n ≥ k tokens: every gram by position (``distinct=False``,
+    index i = the gram at token offset i) or the distinct grams in
+    first-occurrence order (``distinct=True``, word_shingles'
+    array_distinct). Under k tokens: the one whole-text gram
+    (``short_doc="whole_text"``, word_shingles' fallback) or none
+    (``"empty"``)."""
+    if text is None:
+        return None
+    toks = text.split(" ")
+    n = len(toks)
+    if n < k:
+        return [" ".join(toks)] if short_doc == "whole_text" else []
+    grams = (" ".join(toks[i : i + k]) for i in range(n - k + 1))
+    return list(dict.fromkeys(grams) if distinct else grams)
 
-    kk = int(k)
 
-    @F.pandas_udf("struct<shingles: array<string>, hashes: array<long>>")
-    def _sk(texts: pd.Series) -> pd.DataFrame:
-        sh_out: list = []
-        h_out: list = []
-        memo: dict = {}
+def _md5_memo(digest):
+    """Per-batch ``gram → digest(md5(gram))`` memo: the md5 runs once
+    per DISTINCT gram in the batch (Zipf text repeats grams heavily).
+    Build one per Arrow batch, so its size stays bounded by the
+    batch's gram vocabulary."""
+    memo: dict = {}
 
-        def hv(g: str) -> int:
-            v = memo.get(g)
-            if v is None:
-                v = (
-                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    % _P
-                )
-                memo[g] = v
-            return v
+    def hv(g: str):
+        v = memo.get(g)
+        if v is None:
+            v = memo[g] = digest(hashlib.md5(g.encode("utf-8")))
+        return v
 
-        for t in texts:
-            if t is None:
-                # word_shingles(NULL) → [NULL]; shingle_hashes([NULL])
-                # → [NULL] (md5 of a null element is null).
-                sh_out.append([None])
-                h_out.append([None])
-                continue
-            toks = t.split(" ")
-            n = len(toks)
-            if n >= kk:
-                grams = list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + kk]) for i in range(n - kk + 1)
-                    )
-                )
-            else:
-                grams = [" ".join(toks)]
-            sh_out.append(grams)
-            h_out.append([hv(g) for g in grams])
-        return pd.DataFrame({"shingles": sh_out, "hashes": h_out})
+    return hv
 
-    return _sk(text)
+
+def _md5_mod_p(m) -> int:
+    """The portable 60-bit gram hash: first 15 md5 hex digits mod P
+    (contract rule 6 — the oracle's ``hashed`` CTE replays it)."""
+    return int(m.hexdigest()[:15], 16) % _P
+
+
+def _md5_bytes(m) -> bytes:
+    return m.digest()
 
 
 def shingle_sketch_sig(
     text: Column, k: int = LSH_SHINGLE_K, num_hashes: int = LSH_NUM_HASHES
 ) -> Column:
-    """``struct<shingles: array<string>, sig: array<long>>`` — the
-    r16 FUSED form of ``shingle_sketch`` + ``minhash_from_hashes``:
-    one Arrow kernel pass emits the verification shingles AND the
-    finished MinHash signature, so the LSH staging pays ONE
-    JVM→Python→JVM round trip instead of two (the intermediate
-    60-bit hash arrays — megabytes per batch — previously crossed
-    the boundary twice just to feed the signature kernel; guide
-    §4/§4.2). Values are BIT-IDENTICAL to the two-kernel chain (and
-    hence to the expression forms): same md5-hex-slice mod P gram
-    hash, same exact int64 (a·h + b) % P per permutation, same
-    degenerate shapes (null text → [NULL] shingles + all-null
-    signature; under-k-token docs → whole-text gram). Pinned against
-    the staged chain in
-    tests/test_llm_ops.py::test_shingle_sketch_sig_equals_staged.
+    """``struct<shingles: array<string>, sig: array<long>>`` — one
+    Arrow kernel pass emits the verification shingles AND the
+    finished MinHash signature of the expression chain
+    ``word_shingles`` → per-shingle md5 hash → 64 × ``array_min((a·h
+    + b) % P)``. Values are BIT-IDENTICAL to that chain (the oracle
+    replays them: l68's n_match, l02's band buckets): same
+    first-occurrence distinct shingles with the whole-text fallback
+    under k tokens, same md5-hex-slice mod P gram hash, same exact
+    int64 (a·h + b) % P per permutation (a < 2³¹, h < P < 2³¹ ⟹
+    a·h + b < 2⁶², no overflow). Null text → [NULL] shingles + an
+    all-null signature (the minhash of a [NULL] hash array). Pinned
+    against the expression chain in
+    tests/test_llm_ops.py::test_shingle_sketch_sig_equals_staged
+    and the gram-kernel hypothesis property in test_pipeline_ops.
 
-    The signature math runs vectorized ACROSS the batch (one flat
-    concat + per-permutation segmented min), not per doc — the same
-    r16 rewrite as minhash_from_hashes."""
-    import hashlib
-
+    Why a kernel: the interpreted word_shingles string-building
+    lambda was ~18 s of l02's ~30 s gen_sf-sf1 wall (round 13), and
+    the 64-permutation lambda tree does not whole-stage-codegen
+    (2.1 s vs 0.5 s warm at sf0.1, round 11). Fusing both into one
+    pass pays ONE JVM→Python→JVM round trip; the intermediate 60-bit
+    hash arrays never cross the boundary. The signature math runs
+    vectorized ACROSS the batch (one flat concat + per-permutation
+    segmented min), not per doc."""
     kk = int(k)
     params = _hash_params(num_hashes)
     pa = np.array([p[0] for p in params], dtype=np.int64)
@@ -330,38 +296,17 @@ def shingle_sketch_sig(
 
     @F.pandas_udf("struct<shingles: array<string>, sig: array<long>>")
     def _sk(texts: pd.Series) -> pd.DataFrame:
+        hv = _md5_memo(_md5_mod_p)
         sh_out: list = []
         segs: list[np.ndarray] = []
         seg_idx: list[int] = []
-        memo: dict = {}
-
-        def hv(g: str) -> int:
-            v = memo.get(g)
-            if v is None:
-                v = (
-                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    % _P
-                )
-                memo[g] = v
-            return v
-
         for i, t in enumerate(texts):
-            if t is None:
-                # word_shingles(NULL) → [NULL]; the signature of a
-                # [NULL] hash array is all-null (minhash skips null
-                # elements, none remain).
+            grams = _doc_grams(t, kk, True, "whole_text")
+            if grams is None:
+                # word_shingles(NULL) → [NULL]; its signature stays
+                # all-null (array_min over no non-null hash).
                 sh_out.append([None])
                 continue
-            toks = t.split(" ")
-            n = len(toks)
-            if n >= kk:
-                grams = list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + kk]) for i in range(n - kk + 1)
-                    )
-                )
-            else:
-                grams = [" ".join(toks)]
             sh_out.append(grams)
             segs.append(np.array([hv(g) for g in grams], dtype=np.int64))
             seg_idx.append(i)
@@ -403,37 +348,15 @@ def positional_gram_md5(text: Column, k: int) -> Column:
     the wider hash stays worth its shuffle bytes there; parity is
     therefore pinned on VALUES
     (tests/test_pipeline_ops.py::test_positional_gram_md5_equals_expression)."""
-    import hashlib
-
     kk = int(k)
 
     @F.pandas_udf("array<binary>")
     def _pg(texts: pd.Series) -> pd.Series:
+        hv = _md5_memo(_md5_bytes)
         out: list = []
-        memo: dict = {}
-
-        def hv(g: str) -> bytes:
-            v = memo.get(g)
-            if v is None:
-                v = hashlib.md5(g.encode("utf-8")).digest()
-                memo[g] = v
-            return v
-
         for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            toks = t.split(" ")
-            n = len(toks)
-            if n < kk:
-                out.append([])
-                continue
-            out.append(
-                [
-                    hv(" ".join(toks[i : i + kk]))
-                    for i in range(n - kk + 1)
-                ]
-            )
+            grams = _doc_grams(t, kk, False, "empty")
+            out.append(None if grams is None else [hv(g) for g in grams])
         return pd.Series(out, dtype=object)
 
     return _pg(text)
@@ -449,186 +372,48 @@ def word_gram_digests(text: Column, k: int) -> Column:
     bytes 1-4/5-8 and the oracle replays them), so this kernel
     reproduces the exact bytes; parity pinned in
     tests/test_pipeline_ops.py::test_word_gram_digests_equals_expression.
-    Same motivation as :func:`shingle_sketch`: the interpreted
+    Same motivation as :func:`shingle_sketch_sig`: the interpreted
     string-building lambda is the measured tax, the md5 is cheap."""
-    import hashlib
-
     kk = int(k)
 
     @F.pandas_udf("array<binary>")
     def _gd(texts: pd.Series) -> pd.Series:
+        hv = _md5_memo(_md5_bytes)
         out: list = []
-        memo: dict = {}
-
-        def hv(g: str) -> bytes:
-            v = memo.get(g)
-            if v is None:
-                v = hashlib.md5(g.encode("utf-8")).digest()
-                memo[g] = v
-            return v
-
         for t in texts:
-            if t is None:
-                out.append([None])
-                continue
-            toks = t.split(" ")
-            n = len(toks)
-            if n >= kk:
-                grams = dict.fromkeys(
-                    " ".join(toks[i : i + kk]) for i in range(n - kk + 1)
-                )
-            else:
-                grams = {" ".join(toks): None}
-            out.append([hv(g) for g in grams])
+            grams = _doc_grams(t, kk, True, "whole_text")
+            out.append([None] if grams is None else [hv(g) for g in grams])
         return pd.Series(out, dtype=object)
 
     return _gd(text)
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """One 60-bit integer per shingle: first 15 md5 hex digits mod P.
-    md5 is the PORTABLE content hash (contract rule 6): any engine
-    reproduces identical values. Bind this to a COLUMN before
-    building signatures — embedded directly inside the per-
-    permutation lambda the md5+conv subtree is loop-invariant code
-    Spark re-evaluates per permutation (no CSE across higher-order
-    lambda scopes; measured 2.6× on l02)."""
-    return F.transform(
-        shingles,
-        lambda s: F.pmod(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"), F.lit(_P)
-        ),
-    )
-
-
-def minhash_from_hashes_expr(
-    hashes: Column, num_hashes: int = LSH_NUM_HASHES
-) -> Column:
-    """MinHash signature as a pure JVM expression: for each
-    permutation i, min over shingles of (a_i·h + b_i) mod P. This is
-    the REFERENCE form (and the literal transcription of the math);
-    the hot path uses :func:`minhash_from_hashes`, whose Arrow
-    kernel computes bit-identical values — pinned by
-    tests/test_llm_ops.py::test_minhash_arrow_kernel_equals_expression."""
-    params = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _hash_params(num_hashes)
-        ]
-    )
-    return F.transform(
-        params,
-        lambda p: F.array_min(
-            F.transform(hashes, lambda h: F.pmod(p["a"] * h + p["b"], F.lit(_P)))
-        ),
-    )
-
-
-def minhash_from_hashes(hashes: Column, num_hashes: int = LSH_NUM_HASHES) -> Column:
-    """MinHash signature from pre-bound shingle hashes, as an
-    Arrow-batched numpy kernel: one (num_hashes × |shingles|)
-    broadcasted multiply-mod-min per doc. The 64-permutation
-    higher-order-lambda expression tree
-    (:func:`minhash_from_hashes_expr`) does NOT whole-stage-codegen
-    well — measured 2.1 s vs 0.5 s warm for the kernel on the sf0.1
-    corpus (round 11), and the arithmetic is exact int64 either way
-    (a < 2³¹, h < P < 2³¹ ⟹ a·h + b < 2⁶² — no overflow, so numpy
-    %, JVM pmod, and the DuckDB oracle all compute the identical
-    non-negative value). Degenerate inputs follow the expression
-    form exactly (measured on Spark 4.1.2, pinned by the degenerate
-    rows in tests/test_llm_ops.py): a NULL or EMPTY hash array
-    yields an array of ``num_hashes`` nulls (the per-permutation
-    lambda sees no elements, so each array_min is NULL — the outer
-    transform still runs over the 64 literal params), and NULL
-    ELEMENTS are skipped (array_min ignores nulls; an all-null
-    array again yields the all-null signature). word_shingles never
-    emits any of these shapes, but the operator is public."""
-    params = _hash_params(num_hashes)
-    a = np.array([p[0] for p in params], dtype=np.int64)
-    b = np.array([p[1] for p in params], dtype=np.int64)
-    all_null = [None] * num_hashes
-
-    @F.pandas_udf("array<long>")
-    def _mh(hs: pd.Series) -> pd.Series:
-        # r16 (guide §4.2): vectorized ACROSS rows — the old per-doc
-        # ((64×n) multiply-mod-min) numpy call paid ~40-60 µs of
-        # Python/numpy dispatch per DOC (~0.5 s/batch at 10k docs);
-        # now all docs' hashes concatenate into ONE flat array and
-        # each permutation is one multiply-mod + one segmented min
-        # (np.minimum.reduceat over the doc offsets). Identical exact
-        # int64 arithmetic (a·h + b < 2⁶², same % semantics), pinned
-        # bit-identical vs the expression form in test_llm_ops.
-        n = len(hs)
-        segs: list[np.ndarray] = []
-        idx: list[int] = []
-        for i, h in enumerate(hs):
-            if h is None or len(h) == 0:
-                continue
-            arr = np.asarray(h)
-            if arr.dtype.kind != "i":
-                # Null ELEMENTS: Arrow surfaces them as NaN (float
-                # batch) or None (object batch). Vectorized drop —
-                # the no-null hot path above never pays it.
-                arr = arr[~pd.isna(arr)]
-                if arr.size == 0:
-                    continue
-            segs.append(arr.astype(np.int64, copy=False))
-            idx.append(i)
-        out = np.full(n, None, dtype=object)
-        for i in range(n):
-            out[i] = all_null
-        if segs:
-            flat = np.concatenate(segs)
-            offs = np.zeros(len(segs), dtype=np.int64)
-            np.cumsum([s.size for s in segs[:-1]], out=offs[1:])
-            sig = np.empty((len(segs), num_hashes), dtype=np.int64)
-            for j in range(num_hashes):
-                sig[:, j] = np.minimum.reduceat((a[j] * flat + b[j]) % _P, offs)
-            for k, i in enumerate(idx):
-                out[i] = sig[k]
-        return pd.Series(out)
-
-    return _mh(hashes)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = LSH_NUM_HASHES) -> Column:
-    """MinHash signature straight from shingles — the composition of
-    :func:`shingle_hashes` and :func:`minhash_from_hashes`. Hot paths
-    should stage the two through a bound column instead (see
-    shingle_hashes docstring); this one-shot form re-evaluates the
-    md5 per permutation. (xxhash64 would be ~2× faster JVM-side but
-    is Spark-specific; at 100 TB swap it in only if you give up
-    cross-engine reproducibility.)"""
-    return minhash_from_hashes(shingle_hashes(shingles), num_hashes)
-
-
-def lsh_candidate_pairs(
+def _lsh_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = LSH_SHINGLE_K,
-    num_hashes: int = LSH_NUM_HASHES,
-    bands: int = LSH_BANDS,
-    jaccard_threshold: float = LSH_JACCARD_THRESHOLD,
-) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b) with exact Jaccard ≥ τ.
-
-    Returns columns: id_a, id_b, jaccard (rounded 3dp).
-    """
+    shingle_k: int,
+    num_hashes: int,
+    bands: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The LSH stage shared by :func:`lsh_candidate_pairs` and
+    :func:`lsh_pair_calibration`: sketch → persist → band →
+    repartition → bucket self-join. Returns ``(base, candidate_ids)``:
+    the persisted ``(__id, __shingles, __sig)`` sketch table (callers
+    re-attach shingles/signatures from it by key join) and the
+    distinct banded candidate pairs ``(id_a, id_b)``, id_a < id_b.
+    The persist outlives the call: the caller's result reads it."""
     rows_per_band = num_hashes // bands
     # Sketch stage: verification shingles AND the finished MinHash
     # signature come from the FUSED shingle_sketch_sig Arrow kernel
-    # in one pass (r16 — previously shingle_sketch emitted the
-    # 60-bit hash arrays and a SECOND kernel crossed them back into
-    # Python just to take the 64 permutation minima; guide §4). This
-    # keeps the round-13 property: no md5/conv expression and no
-    # array_min permutation lambda exists in the JVM plan at all,
-    # pinned by tests/test_plans.py::
+    # in one pass. No md5/conv expression and no array_min
+    # permutation lambda exists in the JVM plan at all, pinned by
+    # tests/test_plans.py::
     # test_lsh_hashing_lives_in_kernel_not_jvm_lambdas. The persist
-    # below serves banding (__sig) and verification (__shingles)
-    # from one kernel pass. spread_small_scan: the kernel otherwise
-    # runs as ONE task over a single-file fixture scan (the d37
-    # guard; guide §2.5) — a no-op when the scan is already parallel.
+    # serves banding (__sig) and verification (__shingles) from one
+    # kernel pass. spread_small_scan: the kernel otherwise runs as
+    # ONE task over a single-file fixture scan (the d37 guard; guide
+    # §2.5) — a no-op when the scan is already parallel.
     base = spread_small_scan(df).select(
         F.col(id_col).alias("__id"),
         shingle_sketch_sig(F.col(text_col), shingle_k, num_hashes).alias(
@@ -642,8 +427,9 @@ def lsh_candidate_pairs(
     base = persist(base)
 
     # Candidate generation on SLIM rows only — (id, band, bucket).
-    # Never ship the shingle arrays through the band shuffle: payload
-    # width through a shuffle is the thing that breaks at 100 TB.
+    # Never ship the shingle arrays or the 64-int signatures through
+    # the band shuffle: payload width through a shuffle is the thing
+    # that breaks at 100 TB.
     # Bucket id = the band's rows_per_band signature values as a RAW
     # array slice (r16): array equality IS 4-tuple equality — the
     # exact equality classes of the r11-r15 joined-string key (the
@@ -655,7 +441,7 @@ def lsh_candidate_pairs(
     # F.hash/xxhash64 would be Spark-specific AND add a collision
     # term the l68 calibration oracle does not replay. The signature
     # projection collapsing into this SELECT is fine — it reads
-    # cached __h, so the collapsed lambda is slice-only.
+    # cached __sig, so the collapsed lambda is slice-only.
     banded = base.select(
         "__id",
         F.posexplode(
@@ -677,7 +463,8 @@ def lsh_candidate_pairs(
     # shuffle stage (identical subtree — alias-only divergence), the
     # join arrives co-partitioned, and the banding pipeline runs
     # exactly once as the exchange's map stage (which also populates
-    # the base cache for the verification joins below, sequentially).
+    # the base cache for the callers' verification joins,
+    # sequentially).
     # DEPENDENCY (round-14 ADVICE): the single-signature-pass
     # property rides on Spark's exchange reuse (ReusedExchange in
     # the physical plan — on by default via
@@ -700,6 +487,25 @@ def lsh_candidate_pairs(
         )
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
+    )
+    return base, candidate_ids
+
+
+def lsh_candidate_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int = LSH_SHINGLE_K,
+    num_hashes: int = LSH_NUM_HASHES,
+    bands: int = LSH_BANDS,
+    jaccard_threshold: float = LSH_JACCARD_THRESHOLD,
+) -> DataFrame:
+    """Near-duplicate pairs (id_a < id_b) with exact Jaccard ≥ τ.
+
+    Returns columns: id_a, id_b, jaccard (rounded 3dp).
+    """
+    base, candidate_ids = _lsh_candidates(
+        df, id_col, text_col, shingle_k, num_hashes, bands
     )
 
     # Verification: re-attach shingles only for surviving pairs (two
@@ -982,61 +788,16 @@ def lsh_pair_calibration(
     grid), jaccard (r3, l02's rule), err (r3 of the raw ĵ − J, the
     +0.0 outer guard normalizing a −0.0 round).
 
-    Same staging discipline as :func:`lsh_candidate_pairs` (one
-    persisted md5 pass, slim band shuffle); the 64-int signatures
+    Shares the LSH stage with :func:`lsh_candidate_pairs` (one
+    persisted sketch pass, slim band shuffle); the 64-int signatures
     re-attach AFTER candidate generation by key join — they never
-    enter the band exchange.
-
-    CACHE-RELEASE CONTRACT (round-8 advisor): the persisted staging
-    block intentionally OUTLIVES this call — the caller materializes
-    the returned frame after we return. Registry queries release it
-    at the start of the next query; direct library callers (tests,
-    notebooks) call ``functions.materialize.release()`` between
-    calls, or a tight loop (e.g. hypothesis running hundreds of
-    examples) accumulates one cached shingle pass per call."""
-    rows_per_band = num_hashes // bands
-    # r16: fused kernel — shingles + finished signature in ONE Python
-    # pass; spread_small_scan = the d37 kernel-input guard (see
-    # lsh_candidate_pairs).
-    base = spread_small_scan(df).select(
-        F.col(id_col).alias("__id"),
-        shingle_sketch_sig(F.col(text_col), shingle_k, num_hashes).alias(
-            "__sk"
-        ),
-    ).select(
-        "__id",
-        F.col("__sk.shingles").alias("__shingles"),
-        F.col("__sk.sig").alias("__sig"),
-    )
-    base = persist(base)
-    sigs = base
-    banded = sigs.select(
-        "__id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.slice(
-                    F.col("__sig"), b * rows_per_band + 1, rows_per_band
-                ),
-            )
-        ).alias("__band", "__bucket"),
-    )
-    # Same band-join topology fix as lsh_candidate_pairs: an explicit
-    # exchange on the join keys instead of a persist the concurrent
-    # self-join sides would race (each side recomputing the signature
-    # pipeline) — both sides read the ONE reused shuffle stage.
-    banded = banded.repartition("__band", "__bucket")
-    left = banded.alias("a")
-    right = banded.alias("b")
-    candidate_ids = (
-        left.join(
-            right,
-            (F.col("a.__band") == F.col("b.__band"))
-            & (F.col("a.__bucket") == F.col("b.__bucket"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    enter the band exchange. The persisted sketch outlives this call
+    (released at the next registry query or by
+    ``functions.materialize.release()``; a tight library loop that
+    skips the release accumulates one cached sketch pass per
+    call)."""
+    sigs, candidate_ids = _lsh_candidates(
+        df, id_col, text_col, shingle_k, num_hashes, bands
     )
     pairs = candidate_ids.join(
         sigs.select(

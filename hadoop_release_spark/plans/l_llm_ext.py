@@ -2614,9 +2614,8 @@ def l66_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram_keys). Trade: a hotter-than-cap shingle buffers df rows in
     its window group before the filter drops it (WindowExec spills;
     the old agg form shrank map-side) — accepted for the removed
-    explode passes; the agg form is SELECTABLE since round 14 via
-    operators.dedup.DF_GUARD_FORM = "agg" (identical rows, pinned in
-    test_llm_ops)."""
+    explode passes; the exit at pathological heat is the two-pass agg
+    form documented in SCALE.md."""
     from hadoop_release_spark.operators.dedup import gram_keys
 
     d = table(spark, sf_dir, "documents")
@@ -2627,25 +2626,10 @@ def l66_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(gram_keys(F.col("text"), 3, short_doc="empty")).alias("s"),
     ).repartition("s")
-    from hadoop_release_spark.operators import dedup as _dedup
-
-    if _dedup.DF_GUARD_FORM == "agg":
-        # Selectable exit (round-14 ADVICE item 1; see
-        # dedup.DF_GUARD_FORM): two-pass agg — hot shingles shrink
-        # map-side instead of buffering a posting list in one
-        # WindowExec group. Identical rows (pinned in test_llm_ops).
-        keep = (
-            sh.groupBy("s")
-            .agg(F.count("*").alias("__dfreq"))
-            .filter(F.col("__dfreq") <= _L66_MAX_DF)
-            .select("s")
-        )
-        shr = sh.join(keep, "s")
-    else:
-        wdf = Window.partitionBy("s")
-        shr = sh.withColumn("__dfreq", F.count("*").over(wdf)).filter(
-            F.col("__dfreq") <= _L66_MAX_DF
-        )
+    wdf = Window.partitionBy("s")
+    shr = sh.withColumn("__dfreq", F.count("*").over(wdf)).filter(
+        F.col("__dfreq") <= _L66_MAX_DF
+    )
     # Per-doc rare-shingle count as a SECOND window (doc_id) in the
     # same chain: every posting row carries its doc's size, so the
     # pair join's output already holds n_a/n_b and the old two

@@ -195,9 +195,7 @@ def l28_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the filter drops it (WindowExec spills; the df>cap agg
     of the old form shrank map-side instead) — accepted for the
     whole removed kernel pass; the exit at pathological heat is the
-    two-pass agg form, SELECTABLE since round 14 via
-    operators.dedup.DF_GUARD_FORM = "agg" (identical rows, pinned in
-    test_pipeline_ops)."""
+    two-pass agg form documented in SCALE.md."""
     d = table(spark, sf_dir, "documents")
     # Grams travel as 64-bit LONG keys from gram_keys (the Arrow
     # kernel form of explode(word_shingles)+hash): the keys exist
@@ -229,32 +227,11 @@ def l28_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anti-join split; the df filter then drops heavy grams' rows on
     # BOTH sides (an eval row of a heavy gram had nothing to match
     # anyway, so this equals the oracle's train-side-only exclusion).
-    from hadoop_release_spark.operators import dedup as _dedup
-
-    if _dedup.DF_GUARD_FORM == "agg":
-        # Selectable exit (round-14 ADVICE item 1; see
-        # dedup.DF_GUARD_FORM): two-pass agg form — hot grams shrink
-        # MAP-SIDE in the partial count instead of buffering a full
-        # posting list in one WindowExec group; the under-cap gram
-        # set joins back on the same gram partitioning. Identical
-        # rows (pinned: test_pipeline_ops df-guard equality test).
-        keep = (
-            grams.groupBy("gram")
-            .agg(
-                F.sum(
-                    F.when(is_eval, F.lit(0)).otherwise(F.lit(1))
-                ).alias("__train_df")
-            )
-            .filter(F.col("__train_df") <= DECON_MAX_GRAM_DF)
-            .select("gram")
-        )
-        g2 = grams.join(keep, "gram")
-    else:
-        w = Window.partitionBy("gram")
-        g2 = grams.withColumn(
-            "__train_df",
-            F.sum(F.when(is_eval, F.lit(0)).otherwise(F.lit(1))).over(w),
-        ).filter(F.col("__train_df") <= DECON_MAX_GRAM_DF)
+    w = Window.partitionBy("gram")
+    g2 = grams.withColumn(
+        "__train_df",
+        F.sum(F.when(is_eval, F.lit(0)).otherwise(F.lit(1))).over(w),
+    ).filter(F.col("__train_df") <= DECON_MAX_GRAM_DF)
     train = g2.filter(~is_eval).select("doc_id", "gram")
     ev = g2.filter(is_eval).select(F.col("doc_id").alias("eval_id"), "gram")
 
@@ -2904,11 +2881,10 @@ def l74_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     window trade vs the old map-side-combined agg: a hot gram
     buffers its postings in the window group before the filter
     drops it, WindowExec spills — accepted for the removed
-    duplicate kernel pass, exit = the two-pass agg form, SELECTABLE
-    since round 14 via operators.dedup.DF_GUARD_FORM = "agg") and
-    bounds
-    the equi-join at C(MAX_DF,2) per bucket (the l66 argument —
-    matches are Σ df² over near-singleton buckets, never doc×doc);
+    duplicate kernel pass, exit = the two-pass agg form documented
+    in SCALE.md) and bounds the equi-join at C(MAX_DF,2) per
+    bucket (the l66 argument — matches are Σ df² over
+    near-singleton buckets, never doc×doc);
     the run-merge window partitions by (pair, diagonal) —
     cardinality ≤ matches, slim integer rows. The 100 TB exits, documented in SCALE.md: larger
     K (Lee et al. use 50 — fewer, rarer grams), gram-range
@@ -2958,35 +2934,18 @@ def l74_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter, and the self-join's sides read the reused stage
     # co-partitioned (pinned in test_plans.py).
     g = g.repartition("h")
-    from hadoop_release_spark.operators import dedup as _dedup
-
-    if _dedup.DF_GUARD_FORM == "agg":
-        # Selectable exit (round-14 ADVICE item 1; see
-        # dedup.DF_GUARD_FORM): distinct-doc frequency as a two-phase
-        # distinct agg (partial dedup map-side) instead of stacked
-        # windows — hot K-grams never buffer a posting list in one
-        # WindowExec group. Identical rows (pinned in
-        # test_pipeline_ops).
-        keep = (
-            g.groupBy("h")
-            .agg(F.countDistinct("doc_id").alias("__dfreq"))
-            .filter(F.col("__dfreq") <= L74_MAX_DF)
-            .select("h")
+    w_hd = Window.partitionBy("h", "doc_id").orderBy("pos")
+    w_h = Window.partitionBy("h")
+    gg = (
+        g.withColumn(
+            "__first",
+            F.when(F.row_number().over(w_hd) == 1, F.lit(1)).otherwise(
+                F.lit(0)
+            ),
         )
-        gg = g.join(keep, "h")
-    else:
-        w_hd = Window.partitionBy("h", "doc_id").orderBy("pos")
-        w_h = Window.partitionBy("h")
-        gg = (
-            g.withColumn(
-                "__first",
-                F.when(F.row_number().over(w_hd) == 1, F.lit(1)).otherwise(
-                    F.lit(0)
-                ),
-            )
-            .withColumn("__dfreq", F.sum("__first").over(w_h))
-            .filter(F.col("__dfreq") <= L74_MAX_DF)
-        )
+        .withColumn("__dfreq", F.sum("__first").over(w_h))
+        .filter(F.col("__dfreq") <= L74_MAX_DF)
+    )
     a = gg.select(
         "h", F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a")
     )

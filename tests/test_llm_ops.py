@@ -146,141 +146,6 @@ def test_l73_tiers_match_python_tercile_rule(spark, sf_dir):
             assert set(tiers) == {"head", "middle", "tail"}, (lg, tiers)
 
 
-def test_minhash_arrow_kernel_equals_expression(spark, sf_dir):
-    """Round-11 hot-path pin: the Arrow numpy MinHash kernel must
-    produce BIT-IDENTICAL signatures to the reference JVM expression
-    form on the real corpus (exact int64 arithmetic both sides — a
-    drift here would silently change every LSH candidate set)."""
-    from hadoop_release_spark.catalog import table
-    from hadoop_release_spark.operators.dedup import (
-        minhash_from_hashes,
-        minhash_from_hashes_expr,
-        shingle_hashes,
-    )
-
-    d = table(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        shingle_hashes(word_shingles(F.col("text"))).alias("__h"),
-    )
-    try:
-        mismatches = (
-            base.select(
-                "doc_id",
-                minhash_from_hashes(F.col("__h")).alias("ka"),
-                minhash_from_hashes_expr(F.col("__h")).alias("ke"),
-            )
-            .filter(F.col("ka") != F.col("ke"))
-            .count()
-        )
-        assert mismatches == 0
-    finally:
-        spark.catalog.clearCache()
-
-
-def test_minhash_arrow_kernel_degenerate_inputs(spark):
-    """Round-12 advisor fix: the numpy kernel must match the
-    expression form on inputs word_shingles never emits but a public
-    caller can — empty array, null array, null elements, all-null
-    array. The expression form yields [null]*num_hashes for
-    null/empty (each array_min sees no elements) and SKIPS null
-    elements (array_min null semantics); the kernel used to raise
-    ValueError/TypeError on these."""
-    from hadoop_release_spark.operators.dedup import (
-        minhash_from_hashes,
-        minhash_from_hashes_expr,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, [5, 7, 11]),
-            (2, []),
-            (3, None),
-            (4, [None, 9]),
-            (5, [None, None]),
-        ],
-        "id long, h array<long>",
-    )
-    rows = (
-        df.select(
-            "id",
-            minhash_from_hashes(F.col("h"), 8).alias("ka"),
-            minhash_from_hashes_expr(F.col("h"), 8).alias("ke"),
-        )
-        .orderBy("id")
-        .collect()
-    )
-    for r in rows:
-        assert r["ka"] == r["ke"], f"id={r['id']}: {r['ka']} != {r['ke']}"
-    # The degenerate shapes specifically yield the all-null signature.
-    assert rows[1]["ka"] == [None] * 8
-    assert rows[2]["ka"] == [None] * 8
-    assert rows[4]["ka"] == [None] * 8
-
-
-def test_shingle_sketch_equals_expression(spark, sf_dir):
-    """Round-13 hot-path pin: the shingle_sketch Arrow kernel must
-    produce BIT-IDENTICAL (shingles, hashes) arrays to the
-    word_shingles + shingle_hashes expression forms on the real
-    corpus — order included (first-occurrence distinct). These
-    values are oracle-replayed (minhash math + exact-Jaccard
-    verification), so unlike gram_keys a bijection is not enough."""
-    from hadoop_release_spark.catalog import table
-    from hadoop_release_spark.operators.dedup import (
-        shingle_hashes,
-        shingle_sketch,
-        word_shingles,
-    )
-
-    d = table(spark, sf_dir, "documents")
-    both = d.select(
-        "doc_id",
-        shingle_sketch(F.col("text")).alias("__sk"),
-        word_shingles(F.col("text")).alias("__se"),
-    ).select(
-        "doc_id",
-        "__sk",
-        "__se",
-        shingle_hashes(F.col("__se")).alias("__he"),
-    )
-    mism = both.filter(
-        (F.col("__sk.shingles") != F.col("__se"))
-        | (F.col("__sk.hashes") != F.col("__he"))
-    ).count()
-    assert mism == 0
-
-
-def test_shingle_sketch_degenerate_shapes(spark):
-    """Planted shapes: whole-text fallback under k tokens, repeated
-    shingles collapse in first-occurrence order, empty and null
-    text mirror the expression forms exactly."""
-    from hadoop_release_spark.operators.dedup import shingle_sketch
-
-    rows = [
-        (1, "a b c d"),
-        (2, "a b"),            # < k: whole-text fallback
-        (3, ""),               # one empty token
-        (4, None),             # null text
-        (5, "a b c a b c a b c"),  # repeats: distinct, first-occurrence
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: (r["__sk"]["shingles"], r["__sk"]["hashes"])
-        for r in df.select(
-            "doc_id", shingle_sketch(F.col("text"), 3).alias("__sk")
-        ).collect()
-    }
-    assert out[1][0] == ["a b c", "b c d"]
-    assert out[2][0] == ["a b"]
-    assert out[3][0] == [""]
-    assert out[4][0] == [None] and out[4][1] == [None]
-    # 7 windows over "a b c a b c a b c" collapse to 3 distinct, in
-    # first-occurrence order
-    assert out[5][0] == ["a b c", "b c a", "c a b"]
-    for doc, (sh, hs) in out.items():
-        assert len(sh) == len(hs)
-
-
 def test_shingles3_sub3_token_docs_yield_empty_not_crash(spark):
     """Round-14 ADVICE regression: _shingles3 on docs under 3 tokens
     used to build a DESCENDING sequence(1, n-2) whose element_at(0)
@@ -301,56 +166,112 @@ def test_shingles3_sub3_token_docs_yield_empty_not_crash(spark):
     assert out[4] == ["a b c", "b c d"]
 
 
-def test_df_guard_agg_form_equals_window_form_l66(spark, sf_dir, monkeypatch):
-    """Round-14 ADVICE item 1 (l66 leg): the selectable agg df-guard
-    yields rows identical to the window form."""
-    from hadoop_release_spark.operators import dedup as dd
-    from hadoop_release_spark.plans.l_llm_ext import l66_containment_dedup
+def _sketch_vs_expr(df):
+    """Rows of (doc_id, ka, ke): the fused kernel shingle_sketch_sig
+    next to its expression chain word_shingles → shingle_hashes →
+    minhash_from_hashes_expr (tests/_dedup_reference.py)."""
+    from hadoop_release_spark.operators.dedup import shingle_sketch_sig
+    from tests._dedup_reference import shingle_sketch_sig_expr
 
-    monkeypatch.setattr(dd, "DF_GUARD_FORM", "window")
-    base = sorted(map(tuple, l66_containment_dedup(spark, sf_dir).collect()))
-    monkeypatch.setattr(dd, "DF_GUARD_FORM", "agg")
-    agg = sorted(map(tuple, l66_containment_dedup(spark, sf_dir).collect()))
-    assert base == agg
-    assert base, "empty l66 result makes the pin vacuous"
+    return df.select(
+        "doc_id",
+        shingle_sketch_sig(F.col("text")).alias("ka"),
+        shingle_sketch_sig_expr(F.col("text")).alias("ke"),
+    ).collect()
 
 
-def test_shingle_sketch_sig_equals_staged(spark, sf_dir):
-    """r16 fused-kernel pin: shingle_sketch_sig must produce
-    BIT-IDENTICAL (shingles, signature) to the two-kernel chain
-    (shingle_sketch → minhash_from_hashes) on the real corpus — the
-    signature values are oracle-replayed (l68's n_match), so value
-    equality is required, not bijection. Degenerate shapes too:
-    null text → [NULL] shingles + all-null signature; an under-k
-    doc → the whole-text gram's signature."""
+def test_minhash_arrow_kernel_equals_expression(spark, sf_dir):
+    """The Arrow MinHash kernel (now fused into shingle_sketch_sig)
+    must produce BIT-IDENTICAL signatures to the JVM expression form
+    on the real corpus — exact int64 arithmetic both sides; a drift
+    here would silently change every LSH candidate set and l68's
+    oracle-replayed n_match."""
     from hadoop_release_spark.catalog import table
+
+    rows = _sketch_vs_expr(table(spark, sf_dir, "documents"))
+    assert rows
+    for r in rows:
+        assert r["ka"]["sig"] == r["ke"]["sig"], r["doc_id"]
+
+
+def test_shingle_sketch_equals_expression(spark, sf_dir):
+    """shingle_sketch_sig's shingle array must equal word_shingles on
+    the real corpus, order included (first-occurrence distinct): the
+    shingles feed exact-Jaccard verification, so a bijection is not
+    enough."""
+    from hadoop_release_spark.catalog import table
+
+    rows = _sketch_vs_expr(table(spark, sf_dir, "documents"))
+    assert rows
+    for r in rows:
+        assert r["ka"]["shingles"] == r["ke"]["shingles"], r["doc_id"]
+
+
+def test_shingle_sketch_degenerate_shapes(spark):
+    """Planted shapes of shingle_sketch_sig at k=3: whole-text
+    fallback under k tokens, repeated shingles collapse in
+    first-occurrence order, empty and null text, non-ASCII tokens
+    pass through as-is."""
     from hadoop_release_spark.operators.dedup import (
-        minhash_from_hashes,
-        shingle_sketch,
+        LSH_NUM_HASHES,
         shingle_sketch_sig,
     )
 
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    degen = spark.createDataFrame(
-        [(90001, None), (90002, "one two"), (90003, "")],
-        "doc_id long, text string",
+    rows = [
+        (1, "a b c d"),
+        (2, "a b"),  # < k: whole-text fallback
+        (3, ""),  # one empty token
+        (4, None),  # null text
+        (5, "a b c a b c a b c"),  # repeats: distinct, first-occurrence
+        (6, "é 日本 é 日本 é"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {
+        r["doc_id"]: (r["sk"]["shingles"], r["sk"]["sig"])
+        for r in df.select(
+            "doc_id", shingle_sketch_sig(F.col("text"), 3).alias("sk")
+        ).collect()
+    }
+    assert out[1][0] == ["a b c", "b c d"]
+    assert out[2][0] == ["a b"]
+    assert out[3][0] == [""]
+    assert out[4] == ([None], [None] * LSH_NUM_HASHES)
+    # 7 windows over "a b c a b c a b c" collapse to 3 distinct, in
+    # first-occurrence order
+    assert out[5][0] == ["a b c", "b c a", "c a b"]
+    assert out[6][0] == ["é 日本 é", "日本 é 日本"]
+    for doc in (1, 2, 3, 5, 6):
+        sig = out[doc][1]
+        assert len(sig) == LSH_NUM_HASHES and None not in sig, doc
+
+
+def test_shingle_sketch_sig_equals_staged(spark):
+    """The fused kernel shingle_sketch_sig must produce BIT-IDENTICAL
+    (shingles, signature) to the staged expression chain on the
+    degenerate rows too: null text → [NULL] shingles + all-null
+    signature; "" → one empty gram; under-k docs → the whole-text
+    gram's signature; repeats and non-ASCII tokens. (The corpus
+    legs are the two *_equals_expression tests above.)"""
+    from hadoop_release_spark.operators.dedup import LSH_NUM_HASHES
+
+    planted = {
+        90001: None,
+        90002: "one two",  # < k: whole-text fallback
+        90003: "",  # one empty token
+        90004: "a b c d",
+        90005: "a b c a b c a b c",
+        90006: "é 日本 é 日本 é",
+    }
+    df = spark.createDataFrame(
+        list(planted.items()), "doc_id long, text string"
     )
-    both = (
-        d.unionByName(degen)
-        .select(
-            "doc_id",
-            shingle_sketch_sig(F.col("text")).alias("__f"),
-            shingle_sketch(F.col("text")).alias("__sk"),
-        )
-        .select(
-            "doc_id",
-            "__f",
-            F.col("__sk.shingles").alias("__se"),
-            minhash_from_hashes(F.col("__sk.hashes")).alias("__me"),
-        )
-    )
-    rows = both.collect()
-    assert rows
+    rows = _sketch_vs_expr(df)
+    assert len(rows) == len(planted)
     for r in rows:
-        assert list(r["__f"]["shingles"] or []) == list(r["__se"] or []), r
-        assert list(r["__f"]["sig"] or []) == list(r["__me"] or []), r
+        assert r["ka"]["shingles"] == r["ke"]["shingles"], r
+        assert r["ka"]["sig"] == r["ke"]["sig"], r
+    out = {r["doc_id"]: r["ka"] for r in rows}
+    assert out[90001]["shingles"] == [None]
+    assert out[90001]["sig"] == [None] * LSH_NUM_HASHES
+    assert out[90002]["shingles"] == ["one two"]
+    assert out[90003]["shingles"] == [""]

@@ -393,8 +393,9 @@ _GK_SETTINGS = settings(
 )
 _GK_GIVEN = given(
     docs=st.lists(
-        st.lists(
-            st.sampled_from(["a", "b", "ab", "x", ""]),
+        st.none()
+        | st.lists(
+            st.sampled_from(["a", "b", "ab", "x", "", "é", "日本"]),
             min_size=1,
             max_size=12,
         ),
@@ -487,15 +488,33 @@ def test_gram_keys_planted_shapes(spark):
 @_GK_SETTINGS
 @_GK_GIVEN
 def test_gram_keys_property_matches_word_shingles(spark, docs):
-    """Hypothesis: for ANY token soup (tiny alphabet, heavy repeats,
-    lengths straddling k), gram_keys induces word_shingles' equality
-    classes — per-doc counts and the global doc-set profile."""
+    """Hypothesis: for ANY token soup (tiny alphabet with non-ASCII
+    tokens, heavy repeats, lengths straddling k, null docs) every
+    gram kernel keeps the one shared edge-input semantics of its
+    expression form: gram_keys induces word_shingles' equality
+    classes (per-doc counts and the global doc-set profile), and
+    shingle_sketch_sig, word_gram_digests and positional_gram_md5
+    equal their expression forms value for value."""
     from collections import Counter
 
-    from hadoop_release_spark.operators.dedup import gram_keys, word_shingles
+    from hadoop_release_spark.operators.dedup import (
+        gram_keys,
+        positional_gram_md5,
+        shingle_sketch_sig,
+        word_gram_digests,
+        word_shingles,
+    )
+    from tests._dedup_reference import (
+        positional_gram_md5_expr,
+        shingle_sketch_sig_expr,
+        word_gram_digests_expr,
+    )
 
     k = 3
-    rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
+    rows = [
+        (i, None if toks is None else " ".join(toks))
+        for i, toks in enumerate(docs)
+    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     expr = [
         (r["doc_id"], r["g"])
@@ -512,6 +531,19 @@ def test_gram_keys_property_matches_word_shingles(spark, docs):
     ]
     assert Counter(x[0] for x in expr) == Counter(x[0] for x in kern)
     assert _doc_set_profile(expr) == _doc_set_profile(kern)
+
+    text = F.col("text")
+    pairs = {
+        "sig": (shingle_sketch_sig(text, k), shingle_sketch_sig_expr(text, k)),
+        "wgd": (word_gram_digests(text, k), word_gram_digests_expr(text, k)),
+        "pos": (positional_gram_md5(text, k), positional_gram_md5_expr(text, k)),
+    }
+    cols = ["doc_id"]
+    for name, (ka, ke) in pairs.items():
+        cols += [ka.alias(name + "_ka"), ke.alias(name + "_ke")]
+    for r in df.select(*cols).collect():
+        for name in pairs:
+            assert r[name + "_ka"] == r[name + "_ke"], (name, rows[r["doc_id"]])
 
 
 def test_gram_keys_empty_mode_short_docs(spark):
@@ -558,19 +590,15 @@ def test_positional_gram_md5_equals_expression(spark, sf_dir):
     removal plan — value parity, not just equality classes)."""
     from hadoop_release_spark.operators.dedup import positional_gram_md5
     from hadoop_release_spark.plans.l_pipeline import L74_GRAM_K
+    from tests._dedup_reference import positional_gram_md5_expr
 
     k = L74_GRAM_K
-    toks = F.split(F.col("text"), " ")
-    d = table(spark, sf_dir, "documents").filter(F.size(toks) >= k)
-    expr = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.unhex(F.md5(F.array_join(F.slice(toks, i + 1, k), " "))),
-    )
+    d = table(spark, sf_dir, "documents")
     mism = (
         d.select(
             "doc_id",
             positional_gram_md5(F.col("text"), k).alias("ka"),
-            expr.alias("ke"),
+            positional_gram_md5_expr(F.col("text"), k).alias("ke"),
         )
         .filter(F.col("ka") != F.col("ke"))
         .count()
@@ -594,22 +622,16 @@ def test_word_gram_digests_equals_expression(spark, sf_dir):
     md5 digest bytes of transform(word_shingles, unhex(md5)) — the
     l72/l75 gram form whose digest bytes are value-bearing (bloom
     bit positions), order included."""
-    from hadoop_release_spark.operators.dedup import (
-        word_gram_digests,
-        word_shingles,
-    )
+    from hadoop_release_spark.operators.dedup import word_gram_digests
     from hadoop_release_spark.plans.l_pipeline import DECON_NGRAM_K
+    from tests._dedup_reference import word_gram_digests_expr
 
     d = table(spark, sf_dir, "documents")
-    expr = F.transform(
-        word_shingles(F.col("text"), DECON_NGRAM_K),
-        lambda x: F.unhex(F.md5(x)),
-    )
     mism = (
         d.select(
             "doc_id",
             word_gram_digests(F.col("text"), DECON_NGRAM_K).alias("ka"),
-            expr.alias("ke"),
+            word_gram_digests_expr(F.col("text"), DECON_NGRAM_K).alias("ke"),
         )
         .filter(F.col("ka") != F.col("ke"))
         .count()
@@ -627,24 +649,3 @@ def test_word_gram_digests_equals_expression(spark, sf_dir):
     assert len(out[1]) == 1  # whole-text fallback
     assert out[2] == [None]
     assert len(out[3]) == 1
-
-
-def test_df_guard_agg_form_equals_window_form_l28_l74(spark, sf_dir, monkeypatch):
-    """Round-14 ADVICE item 1: the selectable two-pass agg df-guard
-    (operators.dedup.DF_GUARD_FORM = "agg") must produce rows
-    IDENTICAL to the default window form for l28 and l74 — the flag
-    changes shuffle topology (map-side-combined partial counts +
-    semi-join instead of a WindowExec group), never a value."""
-    from hadoop_release_spark.operators import dedup as dd
-    from hadoop_release_spark.plans.l_pipeline import (
-        l28_decontaminate,
-        l74_exact_substring,
-    )
-
-    for fn in (l28_decontaminate, l74_exact_substring):
-        monkeypatch.setattr(dd, "DF_GUARD_FORM", "window")
-        base = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        monkeypatch.setattr(dd, "DF_GUARD_FORM", "agg")
-        agg = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        assert base == agg, fn.__name__
-        assert base, f"{fn.__name__}: empty result makes the pin vacuous"

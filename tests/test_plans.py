@@ -133,15 +133,17 @@ def test_lsh_hashing_lives_in_kernel_not_jvm_lambdas(spark, sf_dir):
     """Guard the dedup.py sketch staging. History: round 7 pinned
     one md5+conv per SHINGLE (CollapseProject re-nested it inside
     the per-permutation array_min lambda — 64× the md5 cost);
-    round 13 moved shingle construction + hashing into the
-    shingle_sketch Arrow kernel (bit-parity-pinned), so the NEW
-    contract is stronger: the JVM plan must contain NO md5/conv
-    expression at all on the sketch path (a reappearance means a
-    refactor silently fell back to the interpreted string-building
-    lambdas — the ~60% wall this round removed), and no array_min
-    permutation lambda either (the signature math rides the
-    minhash_from_hashes kernel)."""
+    round 13 moved shingle construction + hashing into an Arrow
+    kernel, and since r16 the fused shingle_sketch_sig kernel emits
+    the shingles AND the finished MinHash signature (bit-parity-
+    pinned against the expression chain in tests/_dedup_reference.py),
+    so the contract is: the JVM plan contains NO md5/conv expression
+    at all on the sketch path (a reappearance means a refactor
+    silently fell back to the interpreted string-building lambdas —
+    the ~60% wall round 13 removed), and no array_min permutation
+    lambda either."""
     from hadoop_release_spark.catalog import table
+    from hadoop_release_spark.functions.materialize import release
     from hadoop_release_spark.operators.dedup import lsh_candidate_pairs
 
     d = table(spark, sf_dir, "documents")
@@ -151,10 +153,10 @@ def test_lsh_hashing_lives_in_kernel_not_jvm_lambdas(spark, sf_dir):
         lines = plan.splitlines()
         assert not any("md5" in l for l in lines), plan[:800]
         assert not any("array_min" in l for l in lines), plan[:800]
-        # the kernels must actually be there
+        # the kernel must actually be there
         assert "_sk(" in plan or "shingle" in plan.lower(), plan[:800]
     finally:
-        spark.catalog.clearCache()
+        release()
 
 
 #: Queries with write/stream side effects — plan-only audit skips
