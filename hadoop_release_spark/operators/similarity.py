@@ -6,13 +6,13 @@ scale, IVF (inverted-file) coarse quantization bounds the work:
 
   build:  pick K centroids (k-means; here a deterministic stand-in),
           assign every vector to its nearest centroid → cluster id.
-          One broadcast-join + rank-1 window whose exchange is
-          WindowGroupLimit-compressed to ≤1 row per vector per map
-          task; assignment is incremental for appended data.
-          (A zero-shuffle per-row expression over K literal
-          centroids was measured SLOWER — literal-array folds run
-          interpreted, outside whole-stage codegen — so the join
-          form is deliberate.)
+          One Arrow pass (rank_clusters_arrow) against the collected
+          K-row centroid table; assignment is incremental for
+          appended data. (The declarative crossJoin + rank-1 window
+          form it replaced is the test reference in
+          tests/_similarity_reference.py; a per-row expression over
+          K literal centroids measured slower still — literal-array
+          folds run interpreted, outside whole-stage codegen.)
   query:  for each query, rank centroids, keep the nprobe nearest,
           search ONLY vectors in those clusters: a broadcast
           semi-join on cluster id replaces the full scan. Work drops
@@ -27,21 +27,45 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.functions.materialize import persist
-from hadoop_release_spark.functions.vectors import cosine, dot, norm2
+from hadoop_release_spark.functions.vectors import dot, norm2, sq_dist
 
-#: Hard ceiling on the number of centroids rank_clusters_arrow will
-#: collect to the driver (round-8 verdict item 6: the collect
-#: documented its exit condition but did not ENFORCE it). 2^17 lists
-#: covers the √N IVF sizing rule past N = 10^10 vectors while keeping
-#: the driver-side table ≤ ~70 MB at dim 64; beyond it the right
-#: design is hierarchical (IMI-style) coarse quantization or
-#: cluster-bucketed ingest, not a bigger collect — so raise loudly
-#: instead of degrading. Overridable per call for tests / odd shapes.
+#: Hard ceiling on the number of centroids collected to the driver
+#: (by rank_clusters_arrow and the l76 quantizer digest; round-8
+#: verdict item 6: the collect documented its exit condition but did
+#: not ENFORCE it). 2^17 lists covers the √N IVF sizing rule past
+#: N = 10^10 vectors while keeping the driver-side table ≤ ~70 MB at
+#: dim 64; beyond it the right design is hierarchical (IMI-style)
+#: coarse quantization or cluster-bucketed ingest, not a bigger
+#: collect — so raise loudly instead of degrading.
 ARROW_KERNEL_MAX_CENTROIDS = 131_072
+
+
+def _collect_centroids(centroids: DataFrame, who: str) -> list:
+    """The (centroid_id, centroid) rows sorted by id, collected under
+    the ARROW_KERNEL_MAX_CENTROIDS ceiling: the collect itself is
+    LIMIT-bounded to ceiling + 1 rows (one job, driver memory capped
+    whatever K is — a separate count() would recompute an uncached
+    derived centroid frame twice), and an overflow raises instead of
+    degrading."""
+    ceiling = ARROW_KERNEL_MAX_CENTROIDS
+    rows = (
+        centroids.select("centroid_id", "centroid").limit(ceiling + 1).collect()
+    )
+    if len(rows) > ceiling:
+        raise RuntimeError(
+            f"{who}: centroid table exceeds the driver-collect ceiling"
+            f" ARROW_KERNEL_MAX_CENTROIDS={ceiling}. A coarse quantizer"
+            " this large should not be collected or broadcast — switch"
+            " to hierarchical (IMI-style) coarse quantization"
+            " (rank_clusters_two_level) or cluster-bucketed ingest."
+        )
+    return sorted(rows, key=lambda r: r["centroid_id"])
 
 
 def systematic_stride(n: int) -> int:
@@ -84,36 +108,6 @@ def o_systematic_centroids(table: str = "embeddings") -> str:
         f"      WHERE vec_id % (SELECT greatest(CAST(floor(sqrt(\n"
         f"        CAST(count(*) AS DOUBLE))) AS BIGINT), 1)\n"
         f"        FROM {table}) = 0"
-    )
-
-
-def assign_clusters(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Add a ``cluster`` column: id of the nearest centroid.
-
-    ``centroids``: (centroid_id, centroid) — small, broadcast.
-    Deterministic tie-break on centroid_id.
-    """
-    # Norms are computed once per VECTOR (before the crossJoin fans
-    # out to |centroids| rows) and reused as scalars — a pair-row
-    # cosine would re-fold both norms per pair, and higher-order
-    # array folds don't enter codegen. Same IEEE ops, same values.
-    w = Window.partitionBy("vec_id").orderBy(F.col("__sim").desc(), F.col("centroid_id"))
-    return (
-        embeddings.withColumn("__enrm", norm2(F.col("embedding")))
-        .crossJoin(
-            F.broadcast(
-                centroids.withColumn("__cnrm", norm2(F.col("centroid")))
-            )
-        )
-        .withColumn(
-            "__sim",
-            dot(F.col("embedding"), F.col("centroid"))
-            / (F.col("__enrm") * F.col("__cnrm")),
-        )
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__sim", "__rn", "centroid", "__enrm", "__cnrm")
-        .withColumnRenamed("centroid_id", "cluster")
     )
 
 
@@ -307,6 +301,15 @@ def pq_subvectors(
     )
 
 
+
+def _code_subvectors(codebook: DataFrame, m: int, subdim: int) -> DataFrame:
+    """(code_id, u, csub): the codebook's K entries split into their
+    ``m`` subvectors — the right side of every PQ distance join."""
+    return pq_subvectors(
+        codebook, "code_id", "code_id", "embedding", m, subdim
+    ).withColumnRenamed("sub", "csub")
+
+
 def pq_encode(
     embeddings: DataFrame,
     codebook: DataFrame,
@@ -326,12 +329,8 @@ def pq_encode(
     This O(N·K·m) work is the definition of PQ training-free encode —
     at 100 TB it is embarrassingly parallel and the output (m bytes
     per vector vs 4·dim) is what makes the ADC index RAM-resident."""
-    from hadoop_release_spark.functions.vectors import sq_dist
-
     corpus_subs = pq_subvectors(embeddings, id_col, "__pq_id", vec_col, m, subdim)
-    code_subs = pq_subvectors(
-        codebook, "code_id", "code_id", "embedding", m, subdim
-    ).withColumnRenamed("sub", "csub")
+    code_subs = _code_subvectors(codebook, m, subdim)
     d2 = sq_dist(F.col("sub"), F.col("csub"))
     return (
         corpus_subs.join(F.broadcast(code_subs), "u")
@@ -365,12 +364,8 @@ def pq_adc_topk(
     and the top-k cut is deterministic regardless of aggregation
     order (float Σ over subspaces would be order-sensitive in the
     last bits). Returns (vec_id, adc_d2) rounded 3dp, ascending."""
-    from hadoop_release_spark.functions.vectors import sq_dist
-
     q_subs = pq_subvectors(query, "query_id", "query_id", "qe", m, subdim)
-    code_subs = pq_subvectors(
-        codebook, "code_id", "code_id", "embedding", m, subdim
-    ).withColumnRenamed("sub", "csub")
+    code_subs = _code_subvectors(codebook, m, subdim)
     lut = (
         q_subs.join(code_subs, "u")
         .select(
@@ -408,8 +403,9 @@ def ivf_topk(
     cosine rounded 3dp, deterministically tie-broken.
     """
     # Rank centroids per query; keep the nprobe nearest clusters.
-    # Norms once per query/centroid/corpus vector, not per pair —
-    # the assign_clusters rule; identical IEEE values.
+    # Norms once per query/centroid/corpus vector, not per pair (a
+    # pair-row cosine would re-fold both norms, and array folds don't
+    # enter codegen); identical IEEE values.
     qn = query.withColumn("__qnrm", norm2(F.col("qe")))
     csim = dot(F.col("qe"), F.col("centroid")) / (
         F.col("__qnrm") * F.col("__cnrm")
@@ -496,8 +492,6 @@ def ivf_pq_topk(
     partitioned by cluster, so this join is partition pruning (read
     nprobe/K of the index) before any compute; the ADC agg partial-
     aggregates (query, vec) groups map-side. No corpus vectors move."""
-    from hadoop_release_spark.functions.vectors import sq_dist
-
     wq = Window.partitionBy("query_id").orderBy(
         F.col("__cd2").asc(), F.col("centroid_id")
     )
@@ -509,9 +503,7 @@ def ivf_pq_topk(
         .select("query_id", F.col("centroid_id").alias("cluster"))
     )
     q_subs = pq_subvectors(query, "query_id", "query_id", "qe", m, subdim)
-    code_subs = pq_subvectors(
-        codebook, "code_id", "code_id", "embedding", m, subdim
-    ).withColumnRenamed("sub", "csub")
+    code_subs = _code_subvectors(codebook, m, subdim)
     lut = q_subs.join(code_subs, "u").select(
         "query_id",
         "u",
@@ -539,6 +531,85 @@ def ivf_pq_topk(
     )
 
 
+def _stack(col, dim: int, packed: bool = False) -> np.ndarray:
+    """(n, dim) float64 matrix of float32 vectors: one list of floats
+    per cell, or (``packed``) dim·4 float32 LITTLE-ENDIAN bytes per
+    cell, decoded with ONE frombuffer+reshape. The float32→float64
+    widening is exact, so both forms give the doubles the JVM fold
+    reads."""
+    if packed:
+        return (
+            np.frombuffer(b"".join(col), dtype=np.float32)
+            .reshape(-1, dim)
+            .astype(np.float64)
+        )
+    return np.stack([np.asarray(v, dtype=np.float32) for v in col]).astype(
+        np.float64
+    )
+
+
+def _norms(X: np.ndarray, dim: int) -> np.ndarray:
+    """Row L2 norms accumulated dimension by dimension — the IEEE
+    addition order of the JVM ``norm2`` fold, so bit-identical."""
+    acc = np.zeros(len(X))
+    for i in range(dim):
+        xi = X[:, i]
+        acc += xi * xi
+    return np.sqrt(acc)
+
+
+def _cosine_blocks(
+    M: np.ndarray, m_norm: np.ndarray, Q: np.ndarray, q_norm: np.ndarray, dim: int
+):
+    """Yield (start, end, S): the raw cosines of every ``M`` row
+    against ``Q`` rows start..end-1, ``S[i, j - start]`` — the one
+    cosine block every Arrow kernel in this module selects from.
+
+    Bit-parity argument (why the DuckDB oracles need no change): each
+    cell accumulates with an explicit loop over DIMENSIONS, one
+    rank-1 update into a preallocated temporary per dimension, so it
+    sees the identical left-to-right IEEE addition order as the
+    declarative ``dot`` fold (np.dot's pairwise summation would not);
+    one division by the norm product.
+
+    The ``Q`` axis is chunked so working memory is bounded at ~4M
+    cells (two ≤32 MB float64 blocks) for any ``M`` up to ≈ 62.5k
+    rows; past that the 64-column chunk floor makes the blocks scale
+    as 64·len(M) cells — comparable to ``M`` itself, so never an
+    INDEPENDENT OOM risk, but not a fixed bound. The sf10 profile
+    found one l58 cluster at 6 116 members × 13 317 probes (81M
+    cells): the whole-matrix form allocated ~2 GB of temporaries for
+    that single group and its straggler task WAS the cogroup wall
+    (75 s → 24 s measured on the hot shape). Columns are independent,
+    so chunking changes no value and no per-column decision."""
+    m, q = len(M), len(Q)
+    chunk = max(64, 4_000_000 // max(m, 1))
+    tmp = np.empty((m, min(q, chunk)))
+    for s in range(0, q, chunk):
+        e = min(q, s + chunk)
+        S = np.zeros((m, e - s))
+        t = tmp[:, : e - s]
+        for i in range(dim):
+            np.multiply(M[:, i][:, None], Q[s:e, i][None, :], out=t)
+            S += t
+        S /= m_norm[:, None] * q_norm[s:e][None, :]
+        yield s, e, S
+
+
+def _raw_frame(frames: list, a: str, b: str) -> pd.DataFrame:
+    """A grouped kernel's (a, b, __raw) output: the concatenated
+    blocks, or the typed empty frame when no block emitted a row."""
+    if frames:
+        return pd.concat(frames, ignore_index=True)
+    return pd.DataFrame(
+        {
+            a: pd.Series([], dtype="int64"),
+            b: pd.Series([], dtype="int64"),
+            "__raw": pd.Series([], dtype="float64"),
+        }
+    )
+
+
 def score_candidates_arrow(
     assigned: DataFrame,
     probes: DataFrame,
@@ -561,13 +632,10 @@ def score_candidates_arrow(
     ≈ N·nprobe·k.
 
     Correctness argument (oracle unchanged, results bit-identical):
-    * sims accumulate with the explicit per-dimension loop —
-      identical IEEE addition order to the declarative fold (the
-      rank_clusters_arrow argument); one division by the carried
-      norm product. The emitted __raw is the same double the JVM
-      fold would produce; the CONTRACT value round(__raw, 3) is
-      computed by Spark afterwards, so no rounding is re-implemented
-      in Python.
+    * sims come from :func:`_cosine_blocks` over the carried norms —
+      the same double the JVM fold would produce; the CONTRACT value
+      round(__raw, 3) is computed by Spark afterwards, so no rounding
+      is re-implemented in Python.
     * per-(probe, cluster) selection keeps every member with
       raw ≥ (k-th best raw) − margin. The global rank orders by
       (HALF_UP-3dp score DESC, vec_id ASC); rounding moves each
@@ -588,69 +656,26 @@ def score_candidates_arrow(
     ``packed=True`` (round 12, the l76 transport): the member
     ``embedding`` / probe ``qe`` columns are float32 LITTLE-ENDIAN
     BINARY (dim·4 bytes) instead of array<float> — one Arrow buffer
-    per row instead of a per-element list, decoded with ONE
-    frombuffer+reshape per batch. Identical float32 bits → identical
-    float64 widening → identical scores (the l76==l58 pin covers it
-    end-to-end); only the serialization cost changes."""
-    import numpy as np
-    import pandas as pd
-
+    per row instead of a per-element list. Identical float32 bits →
+    identical float64 widening → identical scores (the l76==l58 pin
+    covers it end-to-end); only the serialization cost changes."""
     schema = "query_id long, vec_id long, __raw double"
-
-    def _stack(col: pd.Series) -> "np.ndarray":
-        if packed:
-            return np.frombuffer(
-                b"".join(col), dtype=np.float32
-            ).reshape(-1, dim).astype(np.float64)
-        return np.stack(
-            [np.asarray(v, dtype=np.float32) for v in col]
-        ).astype(np.float64)
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int64"),
-                 "vec_id": pd.Series([], dtype="int64"),
-                 "__raw": pd.Series([], dtype="float64")}
-            )
-        M = _stack(left["embedding"])
-        Q = _stack(right["qe"])
+            return _raw_frame([], "query_id", "vec_id")
         mids = left["vec_id"].to_numpy()
         qids = right["query_id"].to_numpy()
-        mn = left["__nrm"].to_numpy()
-        qn = right["__qnrm"].to_numpy()
-        m, q = len(mids), len(qids)
-        # Probe axis processed in CHUNKS so per-group working memory
-        # is bounded at ~4M cells (two ≤32 MB float64 blocks) for any
-        # cluster up to m ≈ 62.5k members; past that the 64-column
-        # chunk floor makes the two blocks scale as 64·m cells —
-        # comparable to the m×dim member matrix itself, so never an
-        # INDEPENDENT OOM risk, but not a fixed bound. The sf10
-        # profile found one
-        # cluster at 6 116 members × 13 317 probes (81M cells): the
-        # whole-matrix form allocated ~2 GB of temporaries for that
-        # single group and its straggler task WAS the cogroup wall
-        # (75 s → 24 s measured on the hot shape, identical output —
-        # columns are selected independently, so chunking the probe
-        # axis changes no value and no per-probe decision; at a
-        # sufficiently hot 100 TB cluster the unchunked form would
-        # OOM the executor, not just straggle).
-        chunk = max(64, 4_000_000 // max(m, 1))
-        tmp = np.empty((m, min(q, chunk)))
-        out_frames = []
-        for s in range(0, q, chunk):
-            e = min(q, s + chunk)
-            Qc, qc, qnc, w = Q[s:e], qids[s:e], qn[s:e], e - s
-            S = np.zeros((m, w))
-            t = tmp[:, :w]
-            # Rank-1 updates into one preallocated temporary — same
-            # per-cell elementwise ops in the same left-to-right
-            # dimension order as the reference per-column form →
-            # identical IEEE values.
-            for i in range(dim):
-                np.multiply(M[:, i][:, None], Qc[:, i][None, :], out=t)
-                S += t
-            S /= mn[:, None] * qnc[None, :]
+        m = len(mids)
+        frames = []
+        for s, e, S in _cosine_blocks(
+            _stack(left["embedding"], dim, packed),
+            left["__nrm"].to_numpy(),
+            _stack(right["qe"], dim, packed),
+            right["__qnrm"].to_numpy(),
+            dim,
+        ):
+            qc = qids[s:e]
             # Per-probe top-k-with-margin selection, whole-block form
             # (round 12 — the per-column Python loop was ~q numpy-call
             # overheads per cluster). Semantics identical to the
@@ -675,7 +700,7 @@ def score_candidates_arrow(
                 keep = ~self_mask
             rows, cols = np.nonzero(keep)
             if len(rows):
-                out_frames.append(
+                frames.append(
                     pd.DataFrame(
                         {
                             "query_id": qc[cols].astype(np.int64),
@@ -684,13 +709,7 @@ def score_candidates_arrow(
                         }
                     )
                 )
-        if not out_frames:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int64"),
-                 "vec_id": pd.Series([], dtype="int64"),
-                 "__raw": pd.Series([], dtype="float64")}
-            )
-        return pd.concat(out_frames, ignore_index=True)
+        return _raw_frame(frames, "query_id", "vec_id")
 
     return (
         assigned.select("cluster", "vec_id", "embedding", "__nrm")
@@ -723,13 +742,12 @@ def semdedup_pairs_arrow(
     (id_a, id_b, __raw) with id_a < id_b, both in the same cluster.
 
     Correctness argument (oracle unchanged, results bit-identical):
-    * __raw accumulates with the explicit per-dimension loop —
-      identical IEEE addition order to the JVM ``dot`` fold the join
-      form evaluated — over the same float32→float64 widened values,
-      divided once by the carried norm product. The CONTRACT value
-      round(__raw, 3) and the ≥ τ filter are computed by Spark on
-      the emitted raws, so no rounding/threshold is re-implemented
-      in Python.
+    * __raw comes from :func:`_cosine_blocks` over the same
+      float32→float64 widened values and the carried norms —
+      identical to the JVM ``dot`` fold the join form evaluated. The
+      CONTRACT value round(__raw, 3) and the ≥ τ filter are computed
+      by Spark on the emitted raws, so no rounding/threshold is
+      re-implemented in Python.
     * guard = 6e-4 over-covers the HALF_UP boundary: round(x,3) ≥ τ
       requires x ≥ τ − 5e-4 exactly, so every pair the join form
       kept is emitted; the few over-selected pairs in
@@ -739,51 +757,26 @@ def semdedup_pairs_arrow(
 
     Scale shape: the groupBy IS the cluster-keyed shuffle the hinted
     pair join paid (same exchange class, corpus-sized, never
-    broadcast), but each cluster's m×m block runs SIMD and only
-    threshold-passing pairs reach the JVM (≈ the true duplicate
-    count, not Σ|cluster|²). The column axis is chunked at ~4M cells
-    so per-group memory is bounded (~two ≤32 MB blocks) for clusters
-    up to m ≈ 62.5k members — past that the 64-column chunk floor
-    scales the blocks as 64·m cells, comparable to the member matrix
-    itself (no independent OOM risk, but not a fixed bound) — the
-    score_candidates_arrow rule; the measured sf10 hot cluster
-    (6 116 members → 18.7M pairs) can neither straggle unboundedly
-    nor OOM a task."""
-    import numpy as np
-    import pandas as pd
-
+    broadcast), but each cluster's m×m block runs SIMD in bounded
+    chunks (:func:`_cosine_blocks`) and only threshold-passing pairs
+    reach the JVM (≈ the true duplicate count, not Σ|cluster|²); the
+    measured sf10 hot cluster (6 116 members → 18.7M pairs) can
+    neither straggle unboundedly nor OOM a task."""
     schema = "id_a long, id_b long, __raw double"
     bound = tau - guard
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(
-                {"id_a": pd.Series([], dtype="int64"),
-                 "id_b": pd.Series([], dtype="int64"),
-                 "__raw": pd.Series([], dtype="float64")}
-            )
-        M = np.stack(
-            [np.asarray(v, dtype=np.float32) for v in pdf["embedding"]]
-        ).astype(np.float64)
+        if len(pdf) < 2:
+            return _raw_frame([], "id_a", "id_b")
+        M = _stack(pdf["embedding"], dim)
         ids = pdf["vec_id"].to_numpy()
         nrm = pdf["__nrm"].to_numpy()
-        chunk = max(64, 4_000_000 // m)
-        tmp = np.empty((m, min(m, chunk)))
-        out = []
-        for s in range(0, m, chunk):
-            e = min(m, s + chunk)
-            w = e - s
-            S = np.zeros((m, w))
-            t = tmp[:, :w]
-            for i in range(dim):
-                np.multiply(M[:, i][:, None], M[s:e, i][None, :], out=t)
-                S += t
-            S /= nrm[:, None] * nrm[s:e][None, :]
+        frames = []
+        for s, e, S in _cosine_blocks(M, nrm, M, nrm, dim):
             keep = (ids[:, None] < ids[s:e][None, :]) & (S >= bound)
             rows, cols = np.nonzero(keep)
             if len(rows):
-                out.append(
+                frames.append(
                     pd.DataFrame(
                         {
                             "id_a": ids[rows].astype(np.int64),
@@ -792,13 +785,7 @@ def semdedup_pairs_arrow(
                         }
                     )
                 )
-        if not out:
-            return pd.DataFrame(
-                {"id_a": pd.Series([], dtype="int64"),
-                 "id_b": pd.Series([], dtype="int64"),
-                 "__raw": pd.Series([], dtype="float64")}
-            )
-        return pd.concat(out, ignore_index=True)
+        return _raw_frame(frames, "id_a", "id_b")
 
     return (
         assigned.select("cluster", "vec_id", "embedding", "__nrm")
@@ -814,7 +801,6 @@ def rank_clusters_arrow(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_centroids: int = ARROW_KERNEL_MAX_CENTROIDS,
     pack_vectors: bool = False,
     emit_sim_3dp: bool = False,
     emit_vectors: bool = True,
@@ -838,31 +824,29 @@ def rank_clusters_arrow(
     inside one batch kernel, never materialized as rows).
 
     Bit-parity argument (this is why the DuckDB oracles need no
-    change): sims accumulate with an explicit loop over DIMENSIONS —
-    ``S += V[:,i] · C[:,i]`` — so each (vector, centroid) cell sees
-    the identical left-to-right IEEE addition order as the
-    ``aggregate`` fold; float32→float64 widening is exact; the
-    division by the norm product happens once per cell in the same
-    shape; ranking sorts stably on -sim with centroids pre-sorted by
-    id, reproducing ORDER BY sim DESC, centroid_id ASC.
-    tests/test_similarity.py pins kernel == declarative on fixture
-    data, row for row.
+    change): the centroids are the ``M`` side and each batch the
+    ``Q`` side of :func:`_cosine_blocks` (per-dimension accumulation,
+    one division by the norm product; multiplication commutes, so the
+    centroid-major block holds the same doubles as a vector-major
+    one), and both norms come from :func:`_norms` — the ``norm2``
+    fold's order. Each block column (one vector) is ranked with a
+    STABLE argsort on -sim over id-sorted centroids, reproducing
+    ORDER BY sim DESC, centroid_id ASC. tests/test_similarity.py pins
+    kernel == declarative on fixture data, row for row. Chunking the
+    batch axis also bounds the kernel's memory per batch at ~4M
+    cells instead of batch × K.
 
     The centroid table is collected to the driver — the SAME
     K-bounded table the declarative form broadcasts (an explicit
     broadcast, just landing in a numpy closure instead of a JVM
     hash relation). At 100 TB K is the IVF list count (√N-ish by
     the SemDeDup/FAISS sizing rule), far under driver memory; the
-    exit condition for K beyond driver/executor memory is the same
-    as for the broadcast form: hierarchical (IMI-style) coarse
-    quantization, or the bucketed-by-cluster ingest that removes
-    assignment from the query path entirely. That exit is ENFORCED:
-    the collect itself is LIMIT-bounded to ``max_centroids`` + 1
-    rows (one job, driver memory capped at the provisioned ceiling
-    regardless of K — a separate count() would recompute the
-    uncached derived centroid frame twice), and an overflow raises
-    loudly instead of degrading — the same tripwire discipline as
-    the rank primitives' stale-cache guards.
+    exit for K beyond driver/executor memory is hierarchical
+    (IMI-style) coarse quantization (rank_clusters_two_level), or
+    the bucketed-by-cluster ingest that removes assignment from the
+    query path entirely. That exit is ENFORCED by
+    :func:`_collect_centroids`: an overflow of
+    ARROW_KERNEL_MAX_CENTROIDS raises loudly instead of degrading.
 
     ``pack_vectors=True`` (round 12, the l76 index transport): the
     emitted vec column is float32 LITTLE-ENDIAN BINARY (dim·4 bytes
@@ -870,8 +854,8 @@ def rank_clusters_arrow(
     every vector nprobe×, and a per-row BUFFER crosses the Arrow
     boundary (and parquet) far cheaper than a per-element list. The
     packed bytes are the IDENTICAL float32 values the array form
-    carries (same np.float32 cast), so any consumer decoding with
-    frombuffer computes identical results
+    carries (the exact float64 widening narrowed back), so any
+    consumer decoding with frombuffer computes identical results
     (score_candidates_arrow(packed=True); l76==l58 pinned).
 
     ``emit_sim_3dp=True`` (round 13, the l48 decontamination shape):
@@ -905,25 +889,7 @@ def rank_clusters_arrow(
     embedding is an upstream data-quality fault, and every consumer
     of this kernel treats vectors as NOT NULL by contract. Filter
     nulls before calling if the source can contain them."""
-    import numpy as np
-    import pandas as pd
-
-    rows = (
-        centroids.select("centroid_id", "centroid")
-        .limit(max_centroids + 1)
-        .collect()
-    )
-    if len(rows) > max_centroids:
-        raise RuntimeError(
-            f"rank_clusters_arrow: centroid table exceeds the"
-            f" driver-collect ceiling max_centroids={max_centroids}."
-            " A coarse quantizer this large should not be collected or"
-            " broadcast — switch to hierarchical (IMI-style) coarse"
-            " quantization or cluster-bucketed ingest, or raise"
-            " max_centroids explicitly if the driver is provisioned"
-            " for it."
-        )
-    rows = sorted(rows, key=lambda r: r["centroid_id"])
+    rows = _collect_centroids(centroids, "rank_clusters_arrow")
     if not rows:
         # Empty centroid table: the declarative crossJoin+window form
         # (and the SQL oracle) yield an empty result, not a crash —
@@ -948,16 +914,9 @@ def rank_clusters_arrow(
             )
         return empty
     cids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    C = np.stack(
-        [np.asarray(r["centroid"], dtype=np.float64) for r in rows]
-    )
-    K = len(cids)
-    cn = np.zeros(K)
-    for i in range(dim):
-        ci = C[:, i]
-        cn += ci * ci
-    cn = np.sqrt(cn)
-    npb = min(nprobe, K)
+    C = _stack([r["centroid"] for r in rows], dim)
+    cn = _norms(C, dim)
+    npb = min(nprobe, len(cids))
 
     vec_type = "binary" if pack_vectors else "array<float>"
     if emit_vectors:
@@ -972,8 +931,7 @@ def rank_clusters_arrow(
 
     def kernel(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             bad = pdf[vec_col].isna()
             if bad.any():
@@ -984,45 +942,38 @@ def rank_clusters_arrow(
                     " upstream (data-quality fault, not a kernel"
                     " input)."
                 )
-            V32 = np.stack(
-                [
-                    np.asarray(v, dtype=np.float32)
-                    for v in pdf[vec_col]
-                ]
-            )
-            V = V32.astype(np.float64)
-            S = np.zeros((n, K))
-            vn = np.zeros(n)
-            for i in range(dim):
-                vi = V[:, i]
-                vn += vi * vi
-                S += vi[:, None] * C[:, i][None, :]
-            vn = np.sqrt(vn)
-            S /= vn[:, None] * cn[None, :]
-            if emit_sim_3dp:
-                # Round BEFORE ranking — the declarative r3-then-rank
-                # rule, so 3dp ties break on centroid id, not raw sim.
-                S = np.round(S, 3)
-            # stable sort on -sim; C is cid-ascending, so ties break
-            # to the LOWER centroid id — the window's tie rule.
-            sel = np.argsort(-S, axis=1, kind="stable")[:, :npb]
-            idx = np.repeat(np.arange(n), npb)
-            out = {id_col: pdf[id_col].to_numpy()[idx]}
-            if emit_vectors:
-                if pack_vectors:
-                    out[vec_col] = [V32[i].tobytes() for i in idx]
-                else:
-                    out[vec_col] = pdf[vec_col].to_numpy()[idx]
-                out["__nrm"] = vn[idx]
-            out["cluster"] = cids[sel.reshape(-1)]
-            out["__rn"] = np.tile(
-                np.arange(1, npb + 1, dtype=np.int32), n
-            )
-            if emit_sim_3dp:
-                out["__sim"] = np.take_along_axis(
-                    S, sel, axis=1
-                ).reshape(-1)
-            yield pd.DataFrame(out)
+            ids = pdf[id_col].to_numpy()
+            vecs = pdf[vec_col].to_numpy()
+            V = _stack(vecs, dim)
+            vn = _norms(V, dim)
+            if pack_vectors and emit_vectors:
+                V32 = V.astype(np.float32)  # exact: values are float32
+            for s, e, S in _cosine_blocks(C, cn, V, vn, dim):
+                if emit_sim_3dp:
+                    # Round BEFORE ranking — the declarative r3-then-
+                    # rank rule, so 3dp ties break on centroid id.
+                    S = np.round(S, 3)
+                # stable sort on -sim per column; C is cid-ascending,
+                # so ties break to the LOWER centroid id — the
+                # window's tie rule. sel[v] = vector s+v's top npb.
+                sel = np.argsort(-S, axis=0, kind="stable")[:npb].T
+                idx = np.repeat(np.arange(s, e), npb)
+                out = {id_col: ids[idx]}
+                if emit_vectors:
+                    if pack_vectors:
+                        out[vec_col] = [V32[i].tobytes() for i in idx]
+                    else:
+                        out[vec_col] = vecs[idx]
+                    out["__nrm"] = vn[idx]
+                out["cluster"] = cids[sel.reshape(-1)]
+                out["__rn"] = np.tile(
+                    np.arange(1, npb + 1, dtype=np.int32), e - s
+                )
+                if emit_sim_3dp:
+                    out["__sim"] = np.take_along_axis(
+                        S.T, sel, axis=1
+                    ).reshape(-1)
+                yield pd.DataFrame(out)
 
     # (spread_small_scan deliberately NOT applied: the SIMD batch
     # kernel is cheap at fixture vector counts — measured A/B r16,
@@ -1093,113 +1044,60 @@ def best_fine_per_cell_arrow(
     k: int = 1,
 ) -> DataFrame:
     """Per probed coarse CELL, the ``k`` best fine centroids for each
-    probing vector — the second hop of the two-level assignment, as a
+    probing vector — the second hop of the two-level ranking, as a
     cluster-keyed Arrow cogroup (the score_candidates_arrow shape,
-    specialized to ranked-argmax-with-tie-rule so at most k rows per
-    (vector, probed cell) reach the JVM; k=1, the assignment case,
-    keeps the single-argmax fast path).
+    specialized to ranked top-k with the flat tie rule so at most k
+    rows per (vector, probed cell) reach the JVM).
 
     ``fine_cells``: (cluster, centroid_id, centroid, __nrm) — the
     fine centroids grouped by their home coarse cell (distributed;
     K ≈ N/stride rows, never collected).
     ``probes``: (cluster, vec_id, embedding, __qnrm) — each vector
     repeated once per probed cell.
-    Returns (vec_id, fine_id, __raw): the cell-local argmax.
+    Returns (vec_id, fine_id, __raw): the cell-local top k.
 
     Bit-parity argument (the degenerate-equality pin rests on it):
-    sims accumulate with the explicit per-dimension loop — identical
-    IEEE addition order to rank_clusters_arrow's S — over the same
-    float32→float64 widened values, divided once by the carried norm
-    product, so each (vector, fine) cell sees the IDENTICAL double
-    the flat kernel computes. Fine rows are sorted by centroid_id
-    before stacking and np.argmax returns the FIRST maximum, so
-    within-cell ties break to the LOWER fine id — the flat form's
-    ORDER BY sim DESC, centroid_id ASC rule. The probe axis is
-    chunked at ~4M cells (the score_candidates_arrow rule) so a hot
-    cell bounds its working memory instead of straggling/OOMing."""
-    import numpy as np
-    import pandas as pd
-
+    sims come from :func:`_cosine_blocks` over the same
+    float32→float64 widened values and the carried norms, so each
+    (vector, fine) cell sees the IDENTICAL double the flat kernel
+    computes. Fine rows are sorted by centroid_id before stacking and
+    the argsort of -sim is STABLE, so per vector the order is raw
+    DESC, fine id ASC — the flat form's ORDER BY sim DESC,
+    centroid_id ASC rule, NaN last as in the flat kernel."""
     schema = "vec_id long, fine_id long, __raw double"
-
-    def _empty() -> "pd.DataFrame":
-        return pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "fine_id": pd.Series([], dtype="int64"),
-                "__raw": pd.Series([], dtype="float64"),
-            }
-        )
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         # left = this cell's fine centroids; right = its probes. An
         # empty side emits nothing: a probed-but-fine-empty cell (only
         # reachable through exact-duplicate coarse vectors, and made
         # impossible by the self-cell override in
-        # assign_clusters_two_level) simply contributes no candidate.
+        # rank_clusters_two_level) simply contributes no candidate.
         if len(left) == 0 or len(right) == 0:
-            return _empty()
+            return _raw_frame([], "vec_id", "fine_id")
         order = np.argsort(left["centroid_id"].to_numpy(), kind="stable")
-        M = np.stack(
-            [np.asarray(v, dtype=np.float32) for v in left["centroid"]]
-        ).astype(np.float64)[order]
         mids = left["centroid_id"].to_numpy()[order]
-        mn = left["__nrm"].to_numpy()[order]
-        m = len(mids)
         qids = right["vec_id"].to_numpy()
-        qn = right["__qnrm"].to_numpy()
-        q = len(qids)
-        chunk = max(64, 4_000_000 // m)
-        tmp = np.empty((m, min(q, chunk)))
+        kk = min(k, len(mids))
         frames = []
-        for s in range(0, q, chunk):
-            e = min(q, s + chunk)
-            w = e - s
-            Qc = np.stack(
-                [
-                    np.asarray(v, dtype=np.float32)
-                    for v in right["embedding"].iloc[s:e]
-                ]
-            ).astype(np.float64)
-            S = np.zeros((m, w))
-            t = tmp[:, :w]
-            for i in range(dim):
-                np.multiply(M[:, i][:, None], Qc[:, i][None, :], out=t)
-                S += t
-            S /= mn[:, None] * qn[s:e][None, :]
-            if k == 1:
-                best = np.argmax(S, axis=0)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": qids[s:e].astype(np.int64),
-                            "fine_id": mids[best].astype(np.int64),
-                            "__raw": S[best, np.arange(w)],
-                        }
-                    )
+        for s, e, S in _cosine_blocks(
+            _stack(left["centroid"], dim)[order],
+            left["__nrm"].to_numpy()[order],
+            _stack(right["embedding"], dim),
+            right["__qnrm"].to_numpy(),
+            dim,
+        ):
+            sel = np.argsort(-S, axis=0, kind="stable")[:kk, :].reshape(-1)
+            cols = np.broadcast_to(np.arange(e - s), (kk, e - s)).reshape(-1)
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "vec_id": qids[s:e][cols].astype(np.int64),
+                        "fine_id": mids[sel].astype(np.int64),
+                        "__raw": S[sel, cols],
+                    }
                 )
-            else:
-                # Rows are id-sorted and the argsort is STABLE, so
-                # per column the order is raw DESC, fine id ASC —
-                # the flat kernel's exact tie rule (np.argmax above
-                # is the kk=1 special case: first maximum).
-                kk = min(k, m)
-                sel = np.argsort(-S, axis=0, kind="stable")[:kk, :]
-                cols = np.broadcast_to(np.arange(w), (kk, w))
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": qids[s:e][cols.reshape(-1)].astype(
-                                np.int64
-                            ),
-                            "fine_id": mids[sel.reshape(-1)].astype(
-                                np.int64
-                            ),
-                            "__raw": S[sel.reshape(-1), cols.reshape(-1)],
-                        }
-                    )
-                )
-        return pd.concat(frames, ignore_index=True) if frames else _empty()
+            )
+        return _raw_frame(frames, "vec_id", "fine_id")
 
     return (
         fine_cells.select("cluster", "centroid_id", "centroid", "__nrm")
@@ -1210,135 +1108,6 @@ def best_fine_per_cell_arrow(
         )
         .applyInPandas(kernel, schema)
     )
-
-
-def assign_clusters_two_level(
-    embeddings: DataFrame,
-    dim: int,
-    stride: int | None = 64,
-    nprobe: int = 8,
-    probe_all: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    corpus: DataFrame | None = None,
-) -> DataFrame:
-    """Two-level (IMI-style) nearest-centroid assignment — the shipped
-    form of the exit every collect-ceiling tripwire in this module
-    names. Returns (id_col, vec_col, __nrm, cluster): the same
-    contract as ``rank_clusters_arrow(e, fine, 1, dim)``, where fine
-    is the stride-s systematic centroid set.
-
-    Path: rank the K1 ≈ √(nprobe·K) COARSE cells per vector (one
-    rank_clusters_arrow pass — K1 is √-bounded, so its driver collect
-    scales forever), keep the top ``nprobe``; then for each probed
-    cell, score the vector against ONLY that cell's fine centroids in
-    a cluster-keyed Arrow cogroup (best_fine_per_cell_arrow) and take
-    the struct-max across cells (max __raw, tie → min fine id — the
-    flat form's exact ordering). The corpus-proportional fine table
-    (K = N/s) is never collected or broadcast; it moves through ONE
-    cluster-keyed exchange. Per-vector work: 2·√(nprobe·K)·dim flops
-    instead of the flat form's K·dim.
-
-    ``probe_all=True`` ranks EVERY coarse cell, making the candidate
-    multiset exactly the fine set — the assignment is then provably
-    identical to the flat form (per-(v,f) sims bit-identical by the
-    kernel parity argument; per-cell argmax then cross-cell struct
-    max with the same tie rule = global argmax), which is what the
-    degenerate-equality pin in tests/test_similarity.py checks.
-    ``stride=None`` sizes the fine set adaptively at ⌊√N⌋ — the l56
-    contract sizing, used with probe_all for that pin; the IMI scale
-    configuration is a FIXED stride (K ∝ N ⇒ linear pair stage).
-
-    Every fine centroid that is itself a coarse member is FORCED to
-    its own cell (override below): cos(c,c) = 1 ties against an
-    exact-duplicate coarse vector could otherwise strand a cell
-    empty, and a vector probing only empty cells would lose its
-    assignment. The override is part of the quantizer definition
-    (deterministic), and invisible to the probe_all equality — with
-    every cell probed, cell boundaries cannot change the global
-    argmax.
-
-    ``corpus`` (optional): the frame the QUANTIZER is sampled from,
-    when it differs from the frame being assigned — l70 stage 4
-    samples centroids from the FULL embeddings table but assigns
-    only the surviving subset (the registered contract). Defaults to
-    ``embeddings``."""
-    sample_from = corpus if corpus is not None else embeddings
-    if stride is None:
-        stride = max(1, math.isqrt(sample_from.count()))
-    fine, coarse, coarse_stride = two_level_centroids(
-        sample_from, stride, nprobe, id_col=id_col, vec_col=vec_col
-    )
-    fine_cells = (
-        rank_clusters_arrow(
-            fine, coarse, 1, dim, id_col="centroid_id", vec_col="centroid"
-        )
-        .withColumn(
-            "cluster",
-            F.when(
-                F.expr(
-                    f"(centroid_id div {stride}) % {coarse_stride} = 0"
-                ),
-                F.col("centroid_id"),
-            ).otherwise(F.col("cluster")),
-        )
-        .select("cluster", "centroid_id", "centroid", "__nrm")
-    )
-    npb = (1 << 30) if probe_all else nprobe
-    # The coarse ranking emits SLIM rows (id, cell, __rn) — round-14
-    # profiling found the emit_vectors fan-out (nprobe copies of
-    # every vector crossing the Python→JVM Arrow boundary) was ~85%
-    # of l56_imi's sf10 wall (56 of 66 s); the vector fan-out now
-    # happens JVM-side in the columnar join below. Persisted so the
-    # N×K1 kernel runs once.
-    slim = persist(
-        rank_clusters_arrow(
-            embeddings,
-            coarse,
-            npb,
-            dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            emit_vectors=False,
-        )
-    )
-    # One (vector, norm) spine, computed by the declarative fold —
-    # bit-identical to the kernel's __nrm by the standing parity
-    # argument (same left-to-right per-dimension IEEE accumulation;
-    # pinned by test_rank_clusters_arrow_bitwise_equals_declarative
-    # and re-checked by the probe_all equality pins, which compare
-    # __nrm tuples).
-    spine = embeddings.select(id_col, vec_col).withColumn(
-        "__nrm", norm2(F.col(vec_col))
-    )
-    best = best_fine_per_cell_arrow(
-        fine_cells,
-        spine.join(slim.hint("shuffle_hash"), id_col).select(
-            "cluster",
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            F.col("__nrm").alias("__qnrm"),
-        ),
-        dim,
-    )
-    chosen = (
-        best.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__raw").alias("__r"),
-                    (-F.col("fine_id")).alias("__neg"),
-                )
-            ).alias("__m")
-        )
-        .select(
-            F.col("vec_id").alias(id_col),
-            (-F.col("__m.__neg")).alias("cluster"),
-        )
-    )
-    # Corpus-sized × corpus-sized: force the shuffle join so the
-    # spine attach never broadcasts at scale (the l58 rule).
-    return spine.join(chosen.hint("shuffle_hash"), id_col)
 
 
 def rank_clusters_two_level(
@@ -1353,30 +1122,49 @@ def rank_clusters_two_level(
     corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Top-``k`` fine clusters per vector via the two-level (IMI)
-    path — the probe-RANKING lever for the l58/l76 query side (the
-    round-13 verdict named it the remaining unshipped lever after
-    the assignment-side exit). Returns (id_col, vec_col, __nrm,
-    cluster, __rn ≤ k): the rank_clusters_arrow contract, so a
-    consumer swaps quantizers without touching its tail.
+    path — the shipped form of the exit every collect-ceiling
+    tripwire in this module names, used for both assignment (k=1:
+    l56/l70 on the IMI quantizer) and probe ranking (l58 query
+    side). Returns (id_col, vec_col, __nrm, cluster, __rn ≤ k): the
+    rank_clusters_arrow contract against the stride-s systematic fine
+    set, so a consumer swaps quantizers without touching its tail.
 
-    Path: rank coarse cells (√-bounded collect), probe the top
-    ``nprobe_coarse``; per probed cell take the k best fine
-    centroids inside the Arrow cogroup (best_fine_per_cell_arrow
-    k>1 branch — at most k·nprobe_coarse slim rows per vector reach
-    the JVM); merge across cells with ONE per-vector row_number
-    window (raw DESC, fine id ASC — the flat kernel's ordering on
-    bit-identical raws). Global top-k over per-cell top-k is exact:
-    every global winner is a within-cell winner for its vector.
+    Path: rank the K1 ≈ √(nprobe·K) COARSE cells per vector (one
+    rank_clusters_arrow pass — K1 is √-bounded, so its driver collect
+    scales forever), probe the top ``nprobe_coarse``; per probed cell
+    take the k best fine centroids inside the Arrow cogroup
+    (best_fine_per_cell_arrow — at most k·nprobe_coarse slim rows per
+    vector reach the JVM); merge across cells with ONE per-vector
+    row_number window (raw DESC, fine id ASC — the flat kernel's
+    ordering on bit-identical raws). Global top-k over per-cell top-k
+    is exact: every global winner is a within-cell winner for its
+    vector. The corpus-proportional fine table (K = N/s) is never
+    collected or broadcast; it moves through ONE cluster-keyed
+    exchange. Per-vector cost: K1 + nprobe_coarse·(K/K1) sims
+    ≈ 2·√(nprobe·K) instead of the flat K.
 
     ``probe_all=True`` probes every cell, making the candidate
     multiset exactly the fine set — the ranking is then provably
     identical to ``rank_clusters_arrow(e, fine, k, dim)`` (pinned in
-    tests/test_similarity.py). Per-vector cost in the bounded-probe
-    configuration: K1 + nprobe_coarse·(K/K1) sims ≈ 2·√(nprobe·K)
-    instead of the flat K — same arithmetic as
-    assign_clusters_two_level, which is this function's k=1
-    special case (kept separate: the k=1 path needs no merge
-    window, a groupBy struct-max suffices there)."""
+    tests/test_similarity.py). ``stride=None`` sizes the fine set
+    adaptively at ⌊√N⌋ — the l56 contract sizing, used with
+    probe_all for that pin; the IMI scale configuration is a FIXED
+    stride (K ∝ N ⇒ linear pair stage).
+
+    Every fine centroid that is itself a coarse member is FORCED to
+    its own cell (override below): cos(c,c) = 1 ties against an
+    exact-duplicate coarse vector could otherwise strand a cell
+    empty, and a vector probing only empty cells would lose its
+    ranking. The override is part of the quantizer definition
+    (deterministic), and invisible to the probe_all equality — with
+    every cell probed, cell boundaries cannot change the global
+    order.
+
+    ``corpus`` (optional): the frame the QUANTIZER is sampled from,
+    when it differs from the frame being ranked — l70 stage 4
+    samples centroids from the FULL embeddings table but assigns
+    only the surviving subset (the registered contract). Defaults to
+    ``embeddings``."""
     sample_from = corpus if corpus is not None else embeddings
     if stride is None:
         stride = max(1, math.isqrt(sample_from.count()))
@@ -1399,10 +1187,12 @@ def rank_clusters_two_level(
         .select("cluster", "centroid_id", "centroid", "__nrm")
     )
     npb = (1 << 30) if probe_all else nprobe_coarse
-    # Slim coarse ranking + JVM-side vector fan-out — the same
-    # Arrow-boundary economy as assign_clusters_two_level (see the
-    # comment there; ~85% of the sf10 wall was the emit_vectors
-    # fan-out).
+    # The coarse ranking emits SLIM rows (id, cell, __rn) — round-14
+    # profiling found the emit_vectors fan-out (nprobe copies of
+    # every vector crossing the Python→JVM Arrow boundary) was ~85%
+    # of l56_imi's sf10 wall (56 of 66 s); the vector fan-out now
+    # happens JVM-side in the columnar join below. Persisted so the
+    # N×K1 kernel runs once.
     slim = persist(
         rank_clusters_arrow(
             embeddings,
@@ -1414,6 +1204,12 @@ def rank_clusters_two_level(
             emit_vectors=False,
         )
     )
+    # One (vector, norm) spine, computed by the declarative fold —
+    # bit-identical to the kernel's __nrm by the standing parity
+    # argument (pinned by
+    # test_rank_clusters_arrow_bitwise_equals_declarative and
+    # re-checked by the probe_all equality pins, which compare __nrm
+    # tuples).
     spine = embeddings.select(id_col, vec_col).withColumn(
         "__nrm", norm2(F.col(vec_col))
     )

@@ -737,9 +737,10 @@ def l19_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = table(spark, sf_dir, "embeddings")
     centroids = systematic_centroids(e)
-    # Corpus assignment via the Arrow kernel — bit-identical to
-    # assign_clusters (parity pinned in tests/test_similarity.py),
-    # ~12x faster on the N x K stage (round-8 BENCH notes).
+    # Corpus assignment via the Arrow kernel — bit-identical to the
+    # declarative crossJoin + rank-1 window (parity pinned in
+    # tests/test_similarity.py), ~12x faster on the N x K stage
+    # (round-8 BENCH notes).
     assigned = rank_clusters_arrow(e, centroids, 1, _DIM).select(
         "vec_id", "embedding", "cluster"
     )
@@ -1827,8 +1828,9 @@ def l56_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per vector with (cluster, is_kept, dup_of = lowest shadowing
     id, max_sim).
 
-    Scale shape: centroid set broadcasts (assign_clusters — per-row
-    argmin, corpus never shuffles for assignment); the pair stage is
+    Scale shape: the centroid set is collected into the Arrow
+    assignment kernel (rank_clusters_arrow — per-batch argmax,
+    corpus never shuffles for assignment); the pair stage is
     ONE cluster-keyed exchange (the applyInPandas groupBy — round-12
     form: the per-cluster lower-triangle cosine block runs inside
     the chunked semdedup_pairs_arrow kernel, replacing the hinted
@@ -1848,7 +1850,7 @@ def l56_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     centroids = systematic_centroids(e)
     # Assignment (argmin = rank 1) via the Arrow kernel —
-    # bit-identical to assign_clusters' crossJoin + fold + window
+    # bit-identical to the declarative crossJoin + fold + window
     # (same IEEE order and tie rule; kernel parity pinned in
     # tests/test_similarity.py) and carries the per-vector norm out
     # of the same pass, so pair scoring below costs one dot fold
@@ -1878,7 +1880,7 @@ def l56_semdedup_imi(
     * degenerate equality — with ``stride=None`` (adaptive ⌊√N⌋ =
       the l56 contract sizing) and ``probe_all=True``, the two-level
       assignment provably reproduces the flat argmax (see
-      assign_clusters_two_level), so this function's output equals
+      rank_clusters_two_level), so this function's output equals
       registered l56 PAIR-FOR-PAIR (tests/test_similarity.py).
     * scale shape — the default FIXED stride makes K ∝ N, so the
       SemDeDup pair stage Σ|cluster|² is bounded by stride·N
@@ -1891,12 +1893,17 @@ def l56_semdedup_imi(
     not a lower exponent; the next exits (third sampling level,
     multi-sequence cell ranking) are documented there."""
     from hadoop_release_spark.operators.similarity import (
-        assign_clusters_two_level,
+        rank_clusters_two_level,
     )
 
     e = table(spark, sf_dir, "embeddings")
-    assigned = assign_clusters_two_level(
-        e, _DIM, stride=stride, nprobe=nprobe, probe_all=probe_all
+    assigned = rank_clusters_two_level(
+        e,
+        _DIM,
+        k=1,
+        stride=stride,
+        nprobe_coarse=nprobe,
+        probe_all=probe_all,
     ).select("vec_id", "embedding", "__nrm", "cluster")
     return _semdedup_from_assigned(assigned)
 
@@ -2145,22 +2152,10 @@ def _quantizer_digest(centroids: DataFrame) -> str:
 
     import numpy as np
 
-    from hadoop_release_spark.operators.similarity import (
-        ARROW_KERNEL_MAX_CENTROIDS,
-    )
+    from hadoop_release_spark.operators.similarity import _collect_centroids
 
-    rows = (
-        centroids.select("centroid_id", "centroid")
-        .limit(ARROW_KERNEL_MAX_CENTROIDS + 1)
-        .collect()
-    )
-    if len(rows) > ARROW_KERNEL_MAX_CENTROIDS:
-        raise RuntimeError(
-            "quantizer digest: centroid table exceeds the bounded-"
-            "collect ceiling — same exit as rank_clusters_arrow."
-        )
     h = hashlib.md5()
-    for r in sorted(rows, key=lambda r: r["centroid_id"]):
+    for r in _collect_centroids(centroids, "quantizer digest"):
         h.update(int(r["centroid_id"]).to_bytes(8, "little", signed=True))
         h.update(np.asarray(r["centroid"], dtype=np.float32).tobytes())
     return h.hexdigest()
@@ -2346,7 +2341,7 @@ def l76_knn_self_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
       against the frozen quantizer; pinned delta-append == full
       re-ingest in tests/test_similarity.py; measured at gen_sf
       sf10: a 10% delta appends in 6.0 s vs 48.3 s full re-ingest,
-      append/full = 0.124 ≈ the delta fraction — L76_APPEND.json).
+      append/full = 0.124 ≈ the delta fraction).
 
     COMPLEXITY: scoring work is unchanged — N·nprobe·√N kernel flops
     by the same √N-list IVF contract as l58, O(N^1.5) BY DESIGN (the
@@ -2357,12 +2352,13 @@ def l76_knn_self_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, no cluster shuffle), so at equal-or-lower sf10 walls
     its ratio prints LARGER — compare the per-scale WALLS in
     SCALE_REHEARSAL.json instead. The measured production win is
-    AMORTIZATION (L76_AMORTIZED.json,
-    scripts/profile_l76_amortized.py): on the staged index the
-    per-run query path at gen_sf sf10 is ~½ of either variant's
-    one-shot wall — the ingest (assignment + bucketed write) is paid
-    once per corpus, and a one-shot run is the WORST case for this
-    op, the only case the registered form can show.
+    AMORTIZATION: on the staged index the per-run query path at
+    gen_sf sf10 is ~½ of either variant's one-shot wall (measured:
+    ingest 46.3 s once per corpus, then a query-path median of
+    53.1 s over 3 reps; sf1: 6.0 s ingest, 2.5 s query median) —
+    the ingest (assignment + bucketed write) is paid once per
+    corpus, and a one-shot run is the WORST case for this op, the
+    only case the registered form can show.
 
     Local staging writes to a fixed scratch dir (overwrite-safe); at
     scale the bucketed table IS the stored index layout."""

@@ -2562,16 +2562,17 @@ def l70_corpus_pipeline_v2_imi(
       SCALE_REHEARSAL.json["decade2"]["l70_corpus_pipeline_v2_imi"].
     """
     from hadoop_release_spark.operators.similarity import (
-        assign_clusters_two_level,
+        rank_clusters_two_level,
     )
     from hadoop_release_spark.plans.l_llm_ext import _DIM
 
     def assign(emb: DataFrame, sv: DataFrame) -> DataFrame:
-        return assign_clusters_two_level(
+        return rank_clusters_two_level(
             sv,
             _DIM,
+            k=1,
             stride=stride,
-            nprobe=nprobe,
+            nprobe_coarse=nprobe,
             probe_all=probe_all,
             corpus=emb,
         )

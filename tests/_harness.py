@@ -12,7 +12,9 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -25,11 +27,26 @@ if str(REPO_ROOT) not in sys.path:
 
 from hadoop_release_spark.catalog import TABLES  # noqa: E402
 
+#: DuckDB settings of every oracle connection (callers may override):
+#: a memory cap well under a shared host's memory, a cap on the spill
+#: files, and few threads so the memory cap is not split into slivers
+#: that spill on every operator.
+ORACLE_MEMORY_LIMIT = "4GB"
+ORACLE_SPILL_LIMIT = "8GB"
+ORACLE_THREADS = 2
+
 
 def open_oracle(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with every fixture table as a view (the
-    driver pre-registers the same views)."""
+    driver pre-registers the same views). Memory is capped and spills
+    go to a per-process directory under the system temp dir, so a
+    large oracle spills to disk instead of exhausting a shared host."""
     con = duckdb.connect()
+    spill = Path(tempfile.gettempdir()) / f"oracle-spill-{os.getpid()}"
+    con.execute(f"SET temp_directory='{spill}'")
+    con.execute(f"SET memory_limit='{ORACLE_MEMORY_LIMIT}'")
+    con.execute(f"SET max_temp_directory_size='{ORACLE_SPILL_LIMIT}'")
+    con.execute(f"SET threads={ORACLE_THREADS}")
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -409,3 +409,31 @@ def test_owned_resources_created_only_through_materialize():
         if pattern.search(line)
     ]
     assert not offenders, "\n".join(offenders)
+
+
+def test_similarity_cosine_loop_only_in_shared_helpers():
+    """Every Arrow kernel in operators/similarity.py takes its cosines
+    from _cosine_blocks and its norms from _norms; a per-dimension
+    ``for … in range(dim)`` loop anywhere else is a second copy of the
+    accumulation whose IEEE order the oracles depend on."""
+    import ast
+    from pathlib import Path
+
+    path = (
+        Path(__file__).resolve().parents[1]
+        / "hadoop_release_spark"
+        / "operators"
+        / "similarity.py"
+    )
+    owners = {
+        top.name
+        for top in ast.parse(path.read_text()).body
+        if isinstance(top, ast.FunctionDef)
+        for node in ast.walk(top)
+        if isinstance(node, ast.For)
+        and isinstance(node.iter, ast.Call)
+        and isinstance(node.iter.func, ast.Name)
+        and node.iter.func.id == "range"
+        and any(isinstance(a, ast.Name) and a.id == "dim" for a in node.iter.args)
+    }
+    assert owners == {"_cosine_blocks", "_norms"}, owners

@@ -10,10 +10,10 @@ from pyspark.sql import functions as F
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.vectors import cosine
 from hadoop_release_spark.operators.similarity import (
-    assign_clusters,
     embedding_near_dup_pairs,
     ivf_topk,
 )
+from tests._similarity_reference import assign_clusters
 
 
 def _setup(spark, sf_dir):
@@ -766,6 +766,12 @@ def test_rank_clusters_arrow_bitwise_equals_declarative(spark, sf_dir):
     assert (
         ref["__nrm"].to_numpy().tobytes() == got["__nrm"].to_numpy().tobytes()
     ), "norms must be IEEE bit-identical"
+    # Rank 1 is the declarative nearest-centroid assignment.
+    nearest = sorted(
+        map(tuple, assign_clusters(e, cent).select("vec_id", "cluster").collect())
+    )
+    first = got[got["__rn"] == 1]
+    assert nearest == list(zip(first["vec_id"], first["cluster"]))
 
 
 def test_adaptive_band_layout_big_branch(spark, tmp_path_factory):
@@ -860,25 +866,34 @@ def test_rank_clusters_arrow_empty_centroids_yields_empty(spark, sf_dir):
     assert out.columns == ["vec_id", "embedding", "__nrm", "cluster", "__rn"]
 
 
-def test_rank_clusters_arrow_enforces_centroid_ceiling(spark, sf_dir):
+def test_rank_clusters_arrow_enforces_centroid_ceiling(
+    spark, sf_dir, monkeypatch
+):
     """Round-8 verdict item 6: the kernel's driver collect documented
     its exit condition (hierarchical quantization beyond driver-sized
-    K) but did not ENFORCE it. A centroid table above max_centroids
-    must raise loudly BEFORE materializing the whole table — planted
-    here with a tiny ceiling so the tripwire itself is exercised."""
+    K) but did not ENFORCE it. A centroid table above
+    ARROW_KERNEL_MAX_CENTROIDS must raise loudly BEFORE materializing
+    the whole table — planted here with a tiny ceiling so the
+    tripwire itself is exercised. The l76 quantizer digest shares the
+    same bounded collect, so it must raise too."""
     from hadoop_release_spark.catalog import table
-    from hadoop_release_spark.operators.similarity import rank_clusters_arrow
+    from hadoop_release_spark.operators import similarity
+    from hadoop_release_spark.plans.l_llm_ext import _quantizer_digest
 
+    monkeypatch.setattr(similarity, "ARROW_KERNEL_MAX_CENTROIDS", 5)
     e = table(spark, sf_dir, "embeddings")
     cent = e.select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid"),
     )
-    with pytest.raises(RuntimeError, match="max_centroids"):
-        rank_clusters_arrow(e, cent, 3, 64, max_centroids=5)
+    with pytest.raises(RuntimeError, match="ARROW_KERNEL_MAX_CENTROIDS=5"):
+        similarity.rank_clusters_arrow(e, cent, 3, 64)
+    with pytest.raises(RuntimeError, match="ARROW_KERNEL_MAX_CENTROIDS=5"):
+        _quantizer_digest(cent)
     # At-or-under the ceiling still runs (boundary is inclusive).
-    ok = rank_clusters_arrow(e, cent.limit(5), 3, 64, max_centroids=5)
+    ok = similarity.rank_clusters_arrow(e, cent.limit(5), 3, 64)
     assert ok.count() > 0
+    assert _quantizer_digest(cent.limit(5))
 
 
 def test_ivf_pq_recall_vs_exact_l2(spark, sf_dir):
@@ -941,17 +956,18 @@ def test_ivf_pq_recall_vs_exact_l2(spark, sf_dir):
 
 
 def test_two_level_probe_all_equals_flat_assignment(spark, sf_dir):
-    """Degenerate-equality pin for assign_clusters_two_level: with
-    EVERY coarse cell probed, the candidate multiset is exactly the
-    fine set, so the two-hop argmax must reproduce the flat
-    rank_clusters_arrow assignment row-for-row — including __nrm
-    bitwise (same kernel) and the tie rule (max raw sim, then min
-    fine id). stride=4 keeps the cell structure NON-trivial
-    (coarse_stride > 1) so the equality actually exercises the
-    per-cell argmax + cross-cell struct-max composition."""
+    """Degenerate-equality pin for the two-level assignment
+    (rank_clusters_two_level with k=1): with EVERY coarse cell
+    probed, the candidate multiset is exactly the fine set, so the
+    two-hop argmax must reproduce the flat rank_clusters_arrow
+    assignment row-for-row — including __nrm bitwise (same kernel)
+    and the tie rule (max raw sim, then min fine id). stride=4 keeps
+    the cell structure NON-trivial (coarse_stride > 1) so the
+    equality actually exercises the per-cell top-1 + cross-cell
+    merge composition."""
     from hadoop_release_spark.operators.similarity import (
-        assign_clusters_two_level,
         rank_clusters_arrow,
+        rank_clusters_two_level,
         two_level_centroids,
     )
 
@@ -961,8 +977,8 @@ def test_two_level_probe_all_equals_flat_assignment(spark, sf_dir):
     flat = rank_clusters_arrow(e, fine, 1, 64).select(
         "vec_id", "__nrm", "cluster"
     )
-    two = assign_clusters_two_level(
-        e, 64, stride=4, nprobe=2, probe_all=True
+    two = rank_clusters_two_level(
+        e, 64, k=1, stride=4, nprobe_coarse=2, probe_all=True
     ).select("vec_id", "__nrm", "cluster")
     a = sorted(map(tuple, flat.collect()))
     b = sorted(map(tuple, two.collect()))
@@ -976,12 +992,14 @@ def test_two_level_imi_mode_total_assignment(spark, sf_dir):
     total — the self-cell override guarantees every probed cell has
     at least one candidate)."""
     from hadoop_release_spark.operators.similarity import (
-        assign_clusters_two_level,
+        rank_clusters_two_level,
     )
 
     e = table(spark, sf_dir, "embeddings")
     n = e.count()
-    out = assign_clusters_two_level(e, 64, stride=4, nprobe=2).persist()
+    out = rank_clusters_two_level(
+        e, 64, k=1, stride=4, nprobe_coarse=2
+    ).persist()
     assert out.count() == n
     assert out.select("vec_id").distinct().count() == n
     assert out.filter(F.col("cluster") % 4 != 0).count() == 0
@@ -997,13 +1015,13 @@ def test_two_level_internal_persists_released(spark, sf_dir):
     RDDs."""
     from hadoop_release_spark.functions import materialize
     from hadoop_release_spark.operators.similarity import (
-        assign_clusters_two_level,
+        rank_clusters_two_level,
     )
 
     materialize.release()  # clean slate from earlier tests
     spark.catalog.clearCache()
     e = table(spark, sf_dir, "embeddings")
-    out = assign_clusters_two_level(e, 64, stride=4, nprobe=2)
+    out = rank_clusters_two_level(e, 64, k=1, stride=4, nprobe_coarse=2)
     out.count()  # materialize → the internal persist is live
     assert materialize._OWNED, "IMI persist was not recorded"
     materialize.release()
