@@ -5348,21 +5348,83 @@ def test_rank_clusters_emit_sim_3dp_matches_reference(
     data=st.data(),
     n_vecs=st.integers(min_value=1, max_value=12),
     stride=st.integers(min_value=1, max_value=4),
+    nprobe=st.integers(min_value=1, max_value=3),
+)
+def test_two_level_probe_all_matches_flat_reference(
+    spark, data, n_vecs, stride, nprobe
+):
+    """Two-level quantizer property (round-14): for ANY small vector
+    set — drawn from a coarse grid so exact cosine TIES (including
+    duplicate vectors, the self-cell-override edge) occur often —
+    the probe-all two-level assignment (rank_clusters_two_level at
+    k=1) must equal a pure-Python replay of the FLAT rule: argmax
+    over the stride-sampled fine centroids of the float64
+    dimension-by-dimension cosine, ties to the LOWER fine id. nprobe
+    varies only the coarse LAYOUT (cell sizing), which probe-all
+    equality must be blind to."""
+    import math
+
+    import numpy as np
+
+    from hadoop_release_spark.operators.similarity import (
+        rank_clusters_two_level,
+    )
+
+    dim = 4
+    comp = st.sampled_from([-1.0, -0.5, 0.25, 0.5, 1.0])
+    vec = st.lists(comp, min_size=dim, max_size=dim).filter(
+        lambda v: any(x != 0 for x in v)
+    )
+    vecs = [data.draw(vec) for _ in range(n_vecs)]
+
+    e = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    rows = rank_clusters_two_level(
+        e, dim, 1, stride=stride, nprobe_coarse=nprobe, probe_all=True
+    ).collect()
+    assert all(r["__rn"] == 1 for r in rows)
+    got = {r["vec_id"]: r["cluster"] for r in rows}
+
+    fine = [(j, v) for j, v in enumerate(vecs) if j % stride == 0]
+    want = {}
+    for i, v in enumerate(vecs):
+        v32 = [float(np.float32(x)) for x in v]
+        vn = math.sqrt(sum(x * x for x in v32))
+        best = None
+        for j, cv in fine:
+            c32 = [float(np.float32(x)) for x in cv]
+            cn = math.sqrt(sum(x * x for x in c32))
+            s = 0.0
+            for k in range(dim):
+                s += v32[k] * c32[k]
+            sim = s / (vn * cn)
+            if best is None or sim > best[1]:
+                best = (j, sim)
+        want[i] = best[0]
+
+    assert len(rows) == len(got)
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(
+    data=st.data(),
+    n_vecs=st.integers(min_value=1, max_value=10),
+    stride=st.integers(min_value=1, max_value=3),
     k=st.integers(min_value=1, max_value=4),
-    nprobe_coarse=st.integers(min_value=1, max_value=3),
 )
 def test_rank_two_level_probe_all_matches_flat_topk_reference(
-    spark, data, n_vecs, stride, k, nprobe_coarse
+    spark, data, n_vecs, stride, k
 ):
-    """Two-level quantizer property (round-14): probe-all ranking must
-    equal a pure-Python replay of the flat rule — per vector, ALL
-    stride-sampled fine centroids ranked by (float64 dim-loop cosine
-    DESC, fine id ASC), top min(k, K) kept with __rn 1..j; k=1 is the
-    assignment. Coarse grid components force exact ties (duplicate
-    vectors included, the self-cell-override edge) so the cross-cell
-    merge's tie handling is exercised, not just the happy path.
-    nprobe_coarse varies only the coarse LAYOUT (cell sizing), which
-    probe-all equality must be blind to."""
+    """Top-k two-level property (round-14, the k>1 kernel branch):
+    probe-all ranking must equal a pure-Python replay of the flat
+    rule — per vector, ALL stride-sampled fine centroids ranked by
+    (float64 dim-loop cosine DESC, fine id ASC), top min(k, K) kept
+    with __rn 1..j. Coarse grid components force exact ties
+    (duplicate vectors included) so the cross-cell merge's tie
+    handling is exercised, not just the happy path."""
     import math
 
     import numpy as np
@@ -5385,12 +5447,7 @@ def test_rank_two_level_probe_all_matches_flat_topk_reference(
     got = sorted(
         (r["vec_id"], r["cluster"], r["__rn"])
         for r in rank_clusters_two_level(
-            e,
-            dim,
-            k,
-            stride=stride,
-            nprobe_coarse=nprobe_coarse,
-            probe_all=True,
+            e, dim, k, stride=stride, nprobe_coarse=2, probe_all=True
         ).collect()
     )
 
