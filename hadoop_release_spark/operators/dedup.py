@@ -566,7 +566,10 @@ def _o_lsh_ctes(
     are generated from the parameters, so the oracle tracks any
     change to the shared LSH_* constants above. ``src`` names the
     relation scanned (any CTE/view with doc_id + text — l70 feeds
-    the exact-dedup survivors instead of raw documents)."""
+    the exact-dedup survivors instead of raw documents). DuckDB
+    inlines the whole chain into every reference, so a caller that
+    reads a ``verified``-derived CTE from more than one place should
+    mark that CTE ``MATERIALIZED`` (l70's ``nkill``)."""
     rows_per_band = num_hashes // bands
     params = _hash_params(num_hashes)
     sig_cols = ",\n             ".join(

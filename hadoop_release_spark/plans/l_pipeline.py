@@ -2206,7 +2206,12 @@ def _o_l70() -> str:
     ), ekept AS (
       SELECT d.* FROM documents d
       JOIN emap m ON d.doc_id = m.doc_id AND m.e_surv = d.doc_id
-    ), {_o_lsh_ctes(src="ekept")}, nkill AS (
+    ), {_o_lsh_ctes(src="ekept")},
+    -- MATERIALIZED, as the Spark plan's eager_truncate(nkill): inlined,
+    -- every consumer (both sides of the spairs self-join included)
+    -- re-runs the whole LSH chain, which exhausts the oracle's memory
+    -- cap even at sf0.001.
+    nkill AS MATERIALIZED (
       SELECT id_b AS doc_id, CAST(min(id_a) AS BIGINT) AS dup_of
       FROM verified WHERE jaccard >= {LSH_JACCARD_THRESHOLD}
       GROUP BY id_b
