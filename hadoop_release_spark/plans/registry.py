@@ -155,8 +155,8 @@ def grading_order(names: list[str]) -> list[str]:
     contracts.py) since they were last driver-checked, so re-grading
     them keeps the cumulative green wall fresh (round-7 verdict
     item 1). Within each staleness group the order is cheapest-first
-    (measured grading cost, scripts/profile_sweep.py on a
-    driver-shaped unconfigured session — see _GRADING_COST_TIERS) so
+    (measured grading cost, scripts/sweep.py on a driver-shaped
+    unconfigured session — see _GRADING_COST_TIERS) so
     that if the cap ever turns out to be partly time-based, the
     expensive streaming tail costs the fewest slots.
 
@@ -222,7 +222,7 @@ _PLAN_REWRITES: dict[str, int] = {}
 #: primary key is never-graded-first, above). Tier 2 is the measured
 #: expensive tail (streaming fixed costs, iterative operators, large
 #: materializations / compare payloads); unlisted names default to
-#: tier 1 (sub-second). Regenerate with scripts/profile_sweep.py.
+#: tier 1 (sub-second). Regenerate from the timings of scripts/sweep.py.
 _GRADING_COST_TIERS: list[tuple[int, list[str]]] = [
     (
         2,

@@ -51,21 +51,20 @@ RUNTIME_SQL_CONFS: dict[str, str] = {
 #: (SparkSession.newSession(), or a driver-provided session distinct
 #: from the first one ensured) shares the applicationId and would
 #: silently skip conf application under an appId key. The WeakSet
-#: self-cleans when sessions are garbage collected. A caller that
-#: deliberately re-configures a session mid-process can force a
-#: re-apply with ``ensure_configs(spark, force=True)``.
+#: self-cleans when sessions are garbage collected.
 import weakref
 
 _ENSURED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
-def ensure_configs(spark: SparkSession, force: bool = False) -> SparkSession:
+def ensure_configs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable contract configs to an existing session.
 
     Safe to call repeatedly; used on driver-provided sessions whose
-    builder configs we do not control. Memoized per session
-    (applicationId) — pass ``force=True`` after deliberately changing
-    session confs. Two extra duties beyond the conf loop:
+    builder configs we do not control. Memoized on session identity
+    (the ``_ENSURED_SESSIONS`` WeakSet), so a second session over the
+    same SparkContext is configured too. Two extra duties beyond the
+    conf loop:
 
     * Verify ``nanosAsLong`` actually took hold — without it every
       events read later dies with an unrelated-looking
@@ -81,7 +80,7 @@ def ensure_configs(spark: SparkSession, force: bool = False) -> SparkSession:
       target partition bytes instead.
     """
     try:
-        if spark in _ENSURED_SESSIONS and not force:
+        if spark in _ENSURED_SESSIONS:
             return spark
     except Exception:
         pass

@@ -9,8 +9,17 @@ pruning, and top-k fusion.
 from __future__ import annotations
 
 import dataclasses
+import sys
+from pathlib import Path
 
-from hadoop_release_spark.plans.registry import specs
+from hadoop_release_spark.catalog import load
+from hadoop_release_spark.plans.registry import all_oracles, all_queries, specs
+from tests._harness import (
+    AUDIT_SKIP_PREFIXES,
+    build_plan,
+    load_fingerprints,
+    plan_fingerprint,
+)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -158,16 +167,6 @@ def test_lsh_hashing_lives_in_kernel_not_jvm_lambdas(spark, sf_dir):
     finally:
         release()
 
-
-#: Queries with write/stream side effects — plan-only audit skips
-#: them (their scale posture is pinned by their own tests).
-_AUDIT_SKIP_PREFIXES = (
-    "a02", "a03", "a04", "a05", "a06", "a07", "a08", "a09", "a10", "a11",
-    "a12", "a13", "j0", "j1", "c15", "s04", "s05", "s07",
-    "c26",  # partitioned scratch write (the DPP layout) — pinned below
-    "l76",  # bucketed-index scratch write (c15 pattern) — pinned by
-            # test_l76_bucketed_cogroup_has_no_cluster_exchange
-)
 
 @dataclasses.dataclass(frozen=True)
 class _BnljGrant:
@@ -338,15 +337,27 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
     """Sweep EVERY pure query's physical plan for scale anti-pattern
     nodes and pin the exact allowlist — a new operator that sneaks in
     an unbounded nested-loop join or a row-wise Python stage fails
-    here, not at 100 TB."""
+    here, not at 100 TB — and diff each plan's fingerprint against
+    tests/plan_fingerprints.json, so every plan change is intentional.
+
+    Plans are built through ``all_queries()``, so ``release()`` frees
+    the previous query's persists first (none can be substituted into
+    this plan as an InMemoryTableScan), and every table is loaded
+    before the sweep, so schema-inference jobs never count as the
+    first reader's eager jobs."""
+    load(spark, sf_dir)
+    committed = load_fingerprints(sf_dir)
     found = {pat: set() for pat in _PLAN_NODE_ALLOWLIST}
-    for name, s in specs().items():
-        if any(name.startswith(p) for p in _AUDIT_SKIP_PREFIXES):
+    fingerprints = {}
+    for name, fn in all_queries().items():
+        if name.startswith(AUDIT_SKIP_PREFIXES):
             continue
-        plan = s.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        df, eager_jobs = build_plan(spark, name, fn, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
         for pat in _PLAN_NODE_ALLOWLIST:
             if pat in plan:
                 found[pat].add(name)
+        fingerprints[name] = plan_fingerprint(df, eager_jobs)
     for pat, names in found.items():
         extra = names - _PLAN_NODE_ALLOWLIST[pat]
         detail = (
@@ -360,33 +371,38 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
         assert not extra, (
             f"{pat} appeared outside its allowlist: {sorted(extra)}{detail}"
         )
+    drift = [
+        f"  {name}: {committed.get(name)} -> {fingerprints.get(name)}"
+        for name in sorted(set(committed) | set(fingerprints))
+        if committed.get(name) != fingerprints.get(name)
+    ]
+    assert not drift, (
+        "plan fingerprints changed (id: committed -> now); if intended, "
+        "record them with `python scripts/sweep.py ID ... --write-fingerprints`:\n"
+        + "\n".join(drift)
+    )
 
 
-def test_salted_agg_equals_plain_agg(spark, sf_dir):
-    from pyspark.sql import functions as F
+def test_sweep_checks_results_and_fingerprints(spark, sf_dir, oracle):
+    """scripts/sweep.py's per-id step on this session: a plain join, an
+    id whose build fires eager jobs, and a rows-only id all come back
+    ok with their committed fingerprints; a wrong oracle is reported
+    as a failure."""
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from sweep import sweep_one
 
-    from hadoop_release_spark.catalog import table
-    from hadoop_release_spark.operators.skew import salted_sum_count
+    load(spark, sf_dir)
+    queries, oracles, committed = all_queries(), all_oracles(), load_fingerprints(sf_dir)
+    for name in ("c13_join_star", "i10_mr_pagerank", "s01_approx_count_distinct"):
+        r = sweep_one(spark, sf_dir, name, queries[name], oracles.get(name), oracle)
+        assert r.ok and r.rows > 0, r
+        assert r.fingerprint == committed[name], (name, r.fingerprint, committed[name])
+    assert committed["i10_mr_pagerank"].get("eager_jobs", 0) > 0
+    assert "s01_approx_count_distinct" not in oracles
 
-    li = table(spark, sf_dir, "lineitem")
-    salted = {
-        r.l_returnflag: (r.sum_value, r.n)
-        for r in salted_sum_count(
-            li, "l_returnflag", "l_quantity", salt_col="l_orderkey", buckets=16
-        ).collect()
-    }
-    plain = {
-        r.l_returnflag: (r.s, r.n)
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.sum(F.col("l_quantity").cast("decimal(25,8)")), 4)
-            .cast("double")
-            .alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    }
-    assert salted == plain
+    wrong = "SELECT * FROM nation"
+    r = sweep_one(spark, sf_dir, "c13_join_star", queries["c13_join_star"], wrong, oracle)
+    assert not r.ok and r.status.startswith("MISMATCH"), r
 
 
 def test_lateral_decorrelated_to_window(spark, sf_dir):
