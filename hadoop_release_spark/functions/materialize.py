@@ -31,7 +31,7 @@ are eager, truncate lineage and return identical rows (pinned by
 tests/test_contract.py::test_eager_truncate_modes_identical).
 :func:`release` frees a local checkpoint's blocks and deletes a
 reliable checkpoint's files through the Hadoop FileSystem API, so a
-looping operator (i10, CC, l70) leaves nothing in the checkpoint dir.
+looping operator (CC, l70) leaves nothing in the checkpoint dir.
 ``DataFrame.unpersist()`` frees neither: the blocks belong to the
 LogicalRDD's own RDD, which is released directly.
 """

@@ -7,8 +7,9 @@ operator produces the identical numbering scalably:
   1. range-partition + sort by the keys (Spark's TotalOrderPartitioner
      analog: sampled range boundaries),
   2. per-partition row_number (a partitioned window — parallel),
-  3. per-partition counts → cumulative offsets (one tiny driver-side
-     list, #partitions entries) joined back via broadcast.
+  3. per-partition counts → cumulative offsets (#partitions entries:
+     a driver-side list, or for prefix sums a window over the tiny
+     totals frame) joined back via broadcast.
 
 As long as the sort keys are a total order (unique), the numbering is
 deterministic regardless of where range boundaries fall.
@@ -35,8 +36,10 @@ def global_prefix_sums(
     ``sum() OVER (ORDER BY …)`` with no PARTITION BY collapses to one
     partition. Here: range-partition by the order keys ONCE,
     per-partition running sums for ALL k columns in one parallel
-    window, then one per-partition-totals collect (#partitions × k
-    longs) broadcast back. Callers needing several cumulative series
+    window, then the per-partition totals (#partitions × k longs)
+    turned into exclusive offsets by a window over that tiny frame
+    and broadcast back — all inside the plan, so building it fires
+    no job. Callers needing several cumulative series
     over the same order (d32's two ECDFs) must use this instead of
     stacking single-column passes: the sampling pass, persist, and
     sort are the cost, and they amortize across columns. The persist
@@ -54,35 +57,19 @@ def global_prefix_sums(
     )
     parted = persist(parted)
 
-    totals = (
-        parted.groupBy(_PID)
-        .agg(
-            *[
-                F.sum(F.col(c).cast("long")).alias(f"__psum_{i}")
-                for i, c in enumerate(value_cols)
-            ]
-        )
-        .orderBy(_PID)
-        .collect()
+    # Offsets inside the plan: the totals frame has at most n_part
+    # rows, so its unpartitioned window and broadcast are tiny.
+    before = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
+    totals = parted.groupBy(_PID).agg(
+        *[F.sum(F.col(c).cast("long")).alias(f"__psum_exp_{i}") for i, c in enumerate(value_cols)]
     )
-    rows, acc = [], [0] * len(value_cols)
-    for row in totals:
-        rows.append(
-            (
-                row[_PID],
-                *[row[f"__psum_{i}"] for i in range(len(value_cols))],
-                *acc,
-            )
-        )
-        for i in range(len(value_cols)):
-            acc[i] += row[f"__psum_{i}"] or 0
-    off_schema = (
-        f"{_PID} int, "
-        + ", ".join(f"__psum_exp_{i} long" for i in range(len(value_cols)))
-        + ", "
-        + ", ".join(f"__sum_offset_{i} long" for i in range(len(value_cols)))
+    offset_df = totals.select(
+        "*",
+        *[
+            F.coalesce(F.sum(f"__psum_exp_{i}").over(before), F.lit(0)).alias(f"__sum_offset_{i}")
+            for i in range(len(value_cols))
+        ],
     )
-    offset_df = df.sparkSession.createDataFrame(rows, off_schema)
 
     wo = Window.partitionBy(_PID).orderBy(*order_cols)
     w = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)

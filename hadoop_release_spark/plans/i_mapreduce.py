@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.contracts import dsum, net_price, osum
-from hadoop_release_spark.functions.materialize import eager_truncate, persist
+from hadoop_release_spark.functions.materialize import persist
 from hadoop_release_spark.plans.registry import register
 
 
@@ -288,27 +288,28 @@ def i10_mr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     float accumulation (l21 kmeans) cannot. Dangling-node mass is
     dropped (standard simplification), teleport keeps ranks alive.
 
-    Scale shape: the edge list is derived once (4-way join, the c13
-    star shape) and persisted; each iteration is one broadcast-able
-    join (ranks: one row per node ≪ edges) + one partial-agg'd
-    groupBy(dst). Each iteration's rank table is EAGERLY
-    materialized via localCheckpoint — without eager
-    materialization, iteration k's broadcast re-executes the whole
-    k−1-deep lineage and the loop goes quadratic (measured 108 s →
-    ~2 s at sf0.1); and versus the earlier persist()+count() form,
-    localCheckpoint additionally TRUNCATES the lineage, so the
-    analyzed plan stays constant-size instead of growing one full
-    iteration-history per round (the r8 union-find lesson applied
-    here: the persist form's final plan carried 1304 Exchange nodes
-    and ~0.8 MB of explain text, and re-analyzing it on every
-    materialization measured 3.41 → 2.16 s median at sf0.1 when
-    truncated, bit-identical output). The materialized state is one
-    row per node — the same bounded-state argument as l21's k
-    centroids — and stays distributed (checkpoint blocks, not a
-    collect). At web scale (nodes ≫ broadcast) the same loop runs
-    with edges hash-partitioned by src and ranks co-partitioned —
-    the shuffle per iteration carries one contrib row per edge,
-    compressed by map-side combine to one per (task, dst)."""
+    Scale shape: one lazy plan, no driver round-trip and no job per
+    iteration. The edge list is derived once (4-way join, the c13
+    star shape) and joined to out-degree; one aggregate then gathers
+    the whole graph into ONE row — every edge ``e`` (src, dst,
+    outdeg) and every node ``v`` — and the PR_ITERS iterations run
+    inside that row as higher-order functions: an ``aggregate`` over
+    ``sequence(1, PR_ITERS)`` whose accumulator is the rank array,
+    each step summing ``pr[src] DIV outdeg`` over the edges into
+    each node. A node with no in-edges sums nothing and gets exactly
+    the teleport rank; an edge whose src or dst is not a nation adds
+    nothing, as in the oracle's joins. The row is bounded: nodes are
+    nations (a ``catalog.BROADCAST_DIMS`` table), so it holds at most
+    |nation|² edges whatever the fact tables' size, and only the
+    4-way join scales with the data. Measured against this at sf0.01
+    and rejected: the co-partitioned loop (edges hash-partitioned by
+    dst and persisted, ranks broadcast each iteration), whose 21 jobs
+    took twice as long — an adaptive cached plan reports its
+    partitioning only once materialized, so each iteration still
+    shuffled its partial sums. At web scale (nodes ≫ one row) that
+    loop is the exit: edges partitioned by ``src`` with ranks
+    co-partitioned by node, one map-side-combined contrib shuffle
+    per iteration."""
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
@@ -324,36 +325,23 @@ def i10_mr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # eager_truncate on the loop state: materializes like
-    # persist+count AND truncates lineage so each iteration's plan is
-    # constant-size (see docstring). r16: the helper
-    # picks localCheckpoint in local mode but RELIABLE checkpoint()
-    # when a checkpoint dir is configured — localCheckpoint blocks
-    # die with a lost executor and the truncated lineage cannot
-    # recompute them (functions/materialize.py).
-    ed = eager_truncate(edges.join(deg, "src"))
-
-    nodes = eager_truncate(n.select(F.col("n_nationkey").alias("node")))
-    ranks = nodes.select("node", F.lit(PR_BASE).cast("bigint").alias("pr"))
-    for _ in range(PR_ITERS):
-        contrib = (
-            ed.join(ranks, ed.src == ranks.node)
-            .select("dst", F.expr("pr DIV outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.alias("n")
-            .join(contrib.alias("ct"), F.col("n.node") == F.col("ct.dst"), "left")
-            .select(
-                F.col("n.node").alias("node"),
-                (F.lit(PR_TELEPORT) + F.expr("(85 * coalesce(s, 0)) DIV 100"))
-                .cast("bigint")
-                .alias("pr"),
-            )
-        )
-        ranks = eager_truncate(ranks)  # eager + lineage-truncating (docstring)
-    return ranks.select(F.col("node").alias("n_nationkey"), F.col("pr").alias("pagerank_scaled"))
+    graph = (
+        edges.join(deg, "src")
+        .select(F.struct("src", "dst", "outdeg").alias("e"))
+        .unionByName(n.select(F.col("n_nationkey").alias("v")), allowMissingColumns=True)
+        .agg(F.collect_list("e").alias("e"), F.collect_list("v").alias("v"))
+    )
+    step = f"""transform(v, x -> CAST({PR_TELEPORT} + (85 * aggregate(
+        filter(e, y -> y.dst = x), 0L,
+        (s, y) -> s + coalesce(map_from_arrays(v, pr)[y.src] DIV y.outdeg, 0L))) DIV 100
+      AS BIGINT))"""
+    ranks = F.expr(
+        f"aggregate(sequence(1, {PR_ITERS}), transform(v, x -> CAST({PR_BASE} AS BIGINT)),"
+        f" (pr, k) -> {step})"
+    )
+    return graph.select(
+        F.inline(F.arrays_zip(F.col("v").alias("n_nationkey"), ranks.alias("pagerank_scaled")))
+    )
 
 
 @register(
@@ -530,7 +518,7 @@ def i12_mr_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     levels = frontier.select("node", F.lit(0).alias("dist"))
     for k in range(1, BFS_LEVELS + 1):
-        # Eager materialization per level (the i10 discipline):
+        # Eager materialization per level:
         # without it level k's broadcast re-executes the whole
         # k−1-deep join lineage and the loop goes quadratic in
         # depth. State is node-bounded.
@@ -648,7 +636,7 @@ def i13_mr_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("nl").alias("nmin"))
         )
-        # Eager materialization per round (the i10 discipline):
+        # Eager materialization per round:
         # round k's two broadcasts would otherwise re-execute the
         # whole k−1-deep lineage. One row per node.
         labels = persist(
@@ -805,7 +793,7 @@ def i14_mr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # list cached, letting Catalyst see the whole 3-round join tree
     # costs one plan compile and one job (measured 4 s vs 10 s with
     # per-round persist+count on this VM's job overhead). The
-    # per-round eager-materialization discipline (i10/i12) remains
+    # per-round eager-materialization discipline (i12/i13) remains
     # the right shape when the round count is UNBOUNDED.
     survivors = edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
     for _ in range(KCORE_ROUNDS):

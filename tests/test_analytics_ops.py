@@ -97,16 +97,7 @@ def test_pagerank_matches_pure_python_integer_replay(spark, sf_dir):
         )
     }
     nodes = [r["n_nationkey"] for r in table(spark, sf_dir, "nation").collect()]
-    outdeg = defaultdict(int)
-    for src, _ in edges:
-        outdeg[src] += 1
-
-    pr = {v: PR_BASE for v in nodes}
-    for _ in range(PR_ITERS):
-        incoming = defaultdict(int)
-        for src, dst in edges:
-            incoming[dst] += pr[src] // outdeg[src]
-        pr = {v: PR_TELEPORT + (85 * incoming[v]) // 100 for v in nodes}
+    pr = _pagerank_replay(edges, nodes)
 
     got = {
         r["n_nationkey"]: r["pagerank_scaled"]
@@ -115,6 +106,76 @@ def test_pagerank_matches_pure_python_integer_replay(spark, sf_dir):
     assert got == pr
     # ranks differentiated: the trade graph is not rank-uniform
     assert len(set(pr.values())) > 1
+
+
+def _pagerank_replay(edges, nodes) -> dict:
+    """The oracle's integer recurrence over a set of (src, dst) edges:
+    out-degree counts every edge, only a src in ``nodes`` contributes
+    and only a dst in ``nodes`` is ranked."""
+    outdeg = defaultdict(int)
+    for src, _ in edges:
+        outdeg[src] += 1
+    pr = {v: PR_BASE for v in nodes}
+    for _ in range(PR_ITERS):
+        incoming = defaultdict(int)
+        for src, dst in edges:
+            if src in pr:
+                incoming[dst] += pr[src] // outdeg[src]
+        pr = {v: PR_TELEPORT + (85 * incoming[v]) // 100 for v in nodes}
+    return pr
+
+
+def test_pagerank_hand_written_graph_edge_cases(spark, tmp_path):
+    """i10 on a five-table graph written by hand. Nation 4 has no
+    in-edges, so its rank is exactly the teleport term; nation 3 has
+    no out-edges. Edges from a supplier nation (8) and to a customer
+    nation (9) that are not in ``nation``, a same-nation order and a
+    repeated edge must change nothing. Spark, the DuckDB oracle and
+    the integer replay agree."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_release_spark.plans.i_mapreduce import _pagerank_oracle
+
+    # (supplier nation, customer nation) of each order line
+    lines = [(0, 1), (0, 2), (0, 2), (1, 0), (1, 2), (2, 0), (2, 3), (8, 1), (0, 9), (1, 1)]
+    i64, i32 = pa.int64(), pa.int32()
+    tables = {
+        "nation": {"n_nationkey": pa.array(range(5), i32)},
+        "supplier": {
+            "s_suppkey": pa.array(range(len(lines)), i64),
+            "s_nationkey": pa.array([s for s, _ in lines], i32),
+        },
+        "customer": {
+            "c_custkey": pa.array(range(len(lines)), i64),
+            "c_nationkey": pa.array([c for _, c in lines], i32),
+        },
+        "orders": {
+            "o_orderkey": pa.array(range(len(lines)), i64),
+            "o_custkey": pa.array(range(len(lines)), i64),
+        },
+        "lineitem": {
+            "l_orderkey": pa.array(range(len(lines)), i64),
+            "l_suppkey": pa.array(range(len(lines)), i64),
+        },
+    }
+    con = duckdb.connect()
+    for name, cols in tables.items():
+        path = tmp_path / f"{name}.parquet"
+        pq.write_table(pa.table(cols), path)
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+
+    want = _pagerank_replay({(s, c) for s, c in lines if s != c}, range(5))
+    got = {
+        r["n_nationkey"]: r["pagerank_scaled"]
+        for r in i10_mr_pagerank(spark, str(tmp_path)).collect()
+    }
+    oracle = dict(con.execute(_pagerank_oracle()).fetchall())
+    con.close()
+    assert got == want == oracle
+    assert got[4] == PR_TELEPORT
+    assert got[3] > PR_TELEPORT  # ranked by its in-edge, passes nothing on
 
 
 def test_quantize_embeddings_codes_bounded_and_invertible(spark, sf_dir):

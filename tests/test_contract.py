@@ -212,12 +212,12 @@ def test_entry_smoke(spark):
 
 def test_persists_do_not_accumulate_across_queries(spark, sf_dir):
     """The queries() wrappers release the previous query's persisted
-    intermediates (rank offsets, LSH sketch tables, CC labels, i10's
-    per-iteration checkpoints) at the start of the next query, so a
-    full-registry sweep in one shared session is bounded to ONE
-    query's working set — never a growing cache. Run the
-    known-persisting queries back-to-back, then a plain one, and
-    assert nothing stays cached: no persisted RDD, no cached plan."""
+    intermediates (rank offsets, LSH sketch tables, CC labels) at the
+    start of the next query, so a full-registry sweep in one shared
+    session is bounded to ONE query's working set — never a growing
+    cache. Run the known-persisting queries back-to-back, then a
+    plain one, and assert nothing stays cached: no persisted RDD, no
+    cached plan."""
     import __spark_entry__ as e
 
     qs = e.queries()
@@ -225,7 +225,6 @@ def test_persists_do_not_accumulate_across_queries(spark, sf_dir):
         "f04_total_order_sort",
         "l02_dedup_near",
         "l22_dedup_survivors",
-        "i10_mr_pagerank",
     ]:
         qs[name](spark, sf_dir).count()
     jsc = spark.sparkContext._jsc.sc()
@@ -342,7 +341,7 @@ def test_eager_truncate_modes_identical(spark, tmp_path):
     checkpoint() when a checkpoint dir is configured and
     localCheckpoint otherwise, (b) produce identical rows in both
     modes, (c) be eager + lineage-truncating in both (the loop
-    operators' contract — i10/l70/CC ride this helper), and (d) have
+    operators' contract — l70 and CC ride this helper), and (d) have
     release() free what it made in both modes: the local checkpoint's
     blocks and the reliable checkpoint's rdd-* files."""
     from hadoop_release_spark.functions.materialize import eager_truncate, release

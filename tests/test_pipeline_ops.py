@@ -32,6 +32,49 @@ def test_global_prefix_sum_matches_sequential(spark):
         acc += v
 
 
+def _prefix_replay(rows, n_values):
+    """Sequential exclusive prefix sums of each value column over rows
+    sorted by their first field: None where the value is None, and a
+    None adds nothing to later rows."""
+    out, acc = {}, [0] * n_values
+    for k, *vals in sorted(rows):
+        out[k] = tuple(None if v is None else a for v, a in zip(vals, acc))
+        acc = [a + (v or 0) for v, a in zip(vals, acc)]
+    return out
+
+
+def test_global_prefix_sums_matches_replay_and_builds_without_jobs(spark):
+    """global_prefix_sums over two value columns equals the sequential
+    replay, with nulls, with range partitions whose values are all
+    null, and with more range partitions than rows; building it fires
+    no job, since the offsets come from a window inside the plan."""
+    from hadoop_release_spark.functions.materialize import release
+    from hadoop_release_spark.operators.rank import global_prefix_sums
+    from tests._harness import build_plan
+
+    n_part = max(spark.sparkContext.defaultParallelism, 2)
+    # b is null on the first 3/4 of the keys: of n_part range
+    # partitions of ~200/n_part rows each, several hold only nulls.
+    many = [
+        (k, None if k % 7 == 3 else k % 11 - 5, None if k < 150 else k % 13)
+        for k in range(200)
+    ]
+    few = [(2, 5, None), (0, None, None), (1, 4, 6)]
+    assert len(few) < n_part
+    for rows in (many, few):
+        df = spark.createDataFrame(rows, "k long, a long, b int").repartition(3)
+        out, jobs = build_plan(
+            spark,
+            "global_prefix_sums",
+            lambda s, _: global_prefix_sums(df, ["k"], ["a", "b"], ["ca", "cb"]),
+            None,
+        )
+        assert jobs == 0
+        got = {r["k"]: (r["ca"], r["cb"]) for r in out.collect()}
+        assert got == _prefix_replay(rows, 2)
+    release()
+
+
 def test_sequence_pack_reconstructs_token_stream(spark, sf_dir):
     """(pack_id, offset_in_pack) must encode exactly the document's
     start position in the concatenated doc_id-ordered token stream:

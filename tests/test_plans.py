@@ -393,11 +393,11 @@ def test_sweep_checks_results_and_fingerprints(spark, sf_dir, oracle):
 
     load(spark, sf_dir)
     queries, oracles, committed = all_queries(), all_oracles(), load_fingerprints(sf_dir)
-    for name in ("c13_join_star", "i10_mr_pagerank", "s01_approx_count_distinct"):
+    for name in ("c13_join_star", "f04_total_order_sort", "s01_approx_count_distinct"):
         r = sweep_one(spark, sf_dir, name, queries[name], oracles.get(name), oracle)
         assert r.ok and r.rows > 0, r
         assert r.fingerprint == committed[name], (name, r.fingerprint, committed[name])
-    assert committed["i10_mr_pagerank"].get("eager_jobs", 0) > 0
+    assert committed["f04_total_order_sort"].get("eager_jobs", 0) > 0
     assert "s01_approx_count_distinct" not in oracles
 
     wrong = "SELECT * FROM nation"
